@@ -17,6 +17,10 @@ query makes the artifact self-adjudicating — a real regression shows
 in the min, a loaded host shows in ``queries_reps`` spread plus the
 fixed-work calibration probes. Cheap-query lines are otherwise
 fixed-overhead-dominated and fake regressions round-over-round.
+
+Detail records (outlier re-runs, per-query executor task seconds,
+per-rep samples) print on their own lines before the headline; with
+``$BENCH_DETAIL_PATH`` set they are also written there as one JSON list.
 """
 
 from __future__ import annotations
@@ -438,6 +442,23 @@ def format_final_line(
     )
 
 
+def write_detail_records(records: list[dict], path: str | None) -> None:
+    """Persist the detail records (``outlier_rerun_guard``,
+    ``per_query_executor_task_sec``, ``per_query_rep_samples``) as one
+    JSON list at ``path`` — a no-op when ``path`` is unset or empty.
+    The records are printed to stdout too, but the harness running
+    the bench keeps only the last ~2000 chars of stdout, so the
+    earlier detail lines never reach an artifact otherwise. Written
+    to a temp file and renamed, so a reader never sees a partial
+    file."""
+    if not path:
+        return
+    tmp = f"{path}.tmp"
+    with open(tmp, "w") as f:
+        json.dump(records, f, indent=1)
+    os.replace(tmp, path)
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
@@ -581,17 +602,16 @@ def main() -> None:
         for n, s in reps.items()
         if max(s) >= 2.0 * min(s) and max(s) - min(s) >= 0.5
     )
+    details: list[dict] = []
     if reruns or spread_flagged:
-        print(
-            json.dumps(
-                {
-                    "metric_detail": "outlier_rerun_guard",
-                    "reruns": reruns,
-                    "spread_flagged": spread_flagged,
-                },
-                separators=(",", ":"),
-            )
+        details.append(
+            {
+                "metric_detail": "outlier_rerun_guard",
+                "reruns": reruns,
+                "spread_flagged": spread_flagged,
+            }
         )
+        print(json.dumps(details[-1], separators=(",", ":")))
 
     exec_sec = collect_exec_sec()
     if exec_sec:
@@ -599,32 +619,30 @@ def main() -> None:
         # reps (reps_per_query gives the denominator) on its OWN
         # detail line — the executor-side witness the wall clock
         # cannot provide at this SF (r16, additions-only)
-        print(
-            json.dumps(
-                {
-                    "metric_detail": "per_query_executor_task_sec",
-                    "queries_exec_sec": exec_sec,
-                },
-                separators=(",", ":"),
-            )
+        details.append(
+            {
+                "metric_detail": "per_query_executor_task_sec",
+                "queries_exec_sec": exec_sec,
+            }
         )
+        print(json.dumps(details[-1], separators=(",", ":")))
 
     # per-rep samples go on their OWN line: the driver captures only
     # the last ~2000 chars of stdout and parses the FINAL line, so the
     # headline record below must stay compact (the r10 artifact lost
     # its value because queries_reps pushed the single line past the
     # capture window)
-    print(
-        json.dumps(
-            {
-                "metric_detail": "per_query_rep_samples",
-                "queries_reps": reps,
-                "reps_per_query": n_reps,
-                "calibration_before_sec": cal_before,
-                "calibration_after_sec": cal_after,
-            }
-        )
+    details.append(
+        {
+            "metric_detail": "per_query_rep_samples",
+            "queries_reps": reps,
+            "reps_per_query": n_reps,
+            "calibration_before_sec": cal_before,
+            "calibration_after_sec": cal_after,
+        }
     )
+    print(json.dumps(details[-1]))
+    write_detail_records(details, os.environ.get("BENCH_DETAIL_PATH"))
 
     total = round(sum(timings.values()), 3)
 

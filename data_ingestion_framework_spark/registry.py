@@ -16,6 +16,7 @@ Cross-engine determinism rules used throughout:
 
 from __future__ import annotations
 
+import os
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -102,30 +103,58 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     ``TIMESTAMP`` here (value-identical under the UTC session timezone)
     so every downstream operator sees one type.
 
-    The returned frame is memoized PER SESSION per (sf_dir, name) —
-    r16 opt, guide §6 (repeated listing/inference): a warm
-    ``spark.read.parquet`` still pays ~120 ms of file-index + footer
-    schema inference per call, and a bench/oracle sweep calls this
-    hundreds of times for the same static driver tables. The cache
-    holds an UNEXECUTED plan handle (DataFrames are immutable): every
-    action still scans the parquet files, so no result or data is
-    reused across runs — this is the file-index/schema caching a
-    metastore gives a real deployment. Keyed on the live session
-    object itself, so a new session (tests, the driver's vanilla
-    harness) builds its own entries."""
+    The returned frame is memoized PER SESSION per (sf_dir, name): a
+    warm ``spark.read.parquet`` still pays ~120 ms of file-index +
+    footer schema inference per call, and a bench/oracle sweep calls
+    this hundreds of times for the same input tables. The memo holds
+    an UNEXECUTED plan handle, so every action still reads the files'
+    contents — but that handle's file index froze the listing it was
+    built from. Each entry is therefore stored with a listing stamp
+    (``_listing_stamp``: size and mtime of every file under the path)
+    and rebuilt when the stamp changes, so an appended or re-written
+    table is never served stale (a frame obtained BEFORE the change
+    keeps its listing, like any ``spark.read`` frame). Paths the stamp
+    cannot list (not a local file or directory, e.g. an object-store
+    URI) are not memoized. Keyed on the live session object itself, so
+    a new session (tests, a harness's vanilla session) builds its own
+    entries."""
+    stamp = _listing_stamp(f"{sf_dir}/{name}.parquet")
+    if stamp is None:
+        return _load_uncached(spark, sf_dir, name)
     cache = getattr(spark, "_difs_load_cache", None)
     if cache is None:
         cache = {}
         try:
             spark._difs_load_cache = cache
-        except AttributeError:
-            cache = None  # exotic session wrapper: stay uncached
-    if cache is not None and (sf_dir, name) in cache:
-        return cache[(sf_dir, name)]
+        except AttributeError:  # exotic session wrapper: stay uncached
+            return _load_uncached(spark, sf_dir, name)
+    hit = cache.get((sf_dir, name))
+    if hit is not None and hit[0] == stamp:
+        return hit[1]
     df = _load_uncached(spark, sf_dir, name)
-    if cache is not None:
-        cache[(sf_dir, name)] = df
+    # the stamp predates the listing the new handle took, so a change
+    # in between only costs one extra rebuild on the next call
+    cache[(sf_dir, name)] = (stamp, df)
     return df
+
+
+def _listing_stamp(path: str) -> tuple | None:
+    """Change witness for a local parquet path: (size, mtime_ns, inode)
+    of a single file, or (relative path, size, mtime_ns) of every file
+    under a directory. ``None`` when ``path`` is not local."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    if not os.path.isdir(path):
+        return (st.st_size, st.st_mtime_ns, st.st_ino)
+    out = []
+    for root, _dirs, files in os.walk(path):
+        for f in files:
+            fst = os.stat(os.path.join(root, f))
+            out.append((os.path.relpath(os.path.join(root, f), path),
+                        fst.st_size, fst.st_mtime_ns))
+    return tuple(sorted(out))
 
 
 def _load_uncached(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

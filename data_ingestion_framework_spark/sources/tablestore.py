@@ -1833,11 +1833,30 @@ class ParquetTable:
             self.set_properties({"identity": spec})
 
     # -- writes --------------------------------------------------------------
-    def _writer(self, df: DataFrame, mode: str):
-        w = self._to_physical(self._with_hidden_partitions(df)).write.mode(mode)
-        if self.partition_by:
-            w = w.partitionBy(*self._physical_partition_cols())
-        return w
+    def _writer(self, df: DataFrame, mode: str, cluster: bool = False):
+        """Writer for the create / append / partition-scoped commits.
+
+        ``cluster=True`` (``overwrite_partitions`` only) clusters a
+        partitioned write's rows by the physical partition columns
+        first (``rebalance`` hint — Delta's optimized write): AQE packs
+        each small partition into one task and splits only partitions
+        above the advisory size, so a commit leaves one file per
+        touched partition instead of one per (write task, partition).
+        Without AQE the hint is a plain hash shuffle on the same
+        columns: still one file per partition, none split. Partitioned
+        ``append`` is not clustered: the extra shuffle of the written
+        data is measured only on small bucket rewrites, where opening
+        files dominates, not on appends. ``overwrite()`` keeps its
+        own writer and the caller's layout: ``compact`` relies on
+        ``coalesce(n)`` and ``compact(zorder_by=...)`` on its range
+        sort."""
+        df = self._to_physical(self._with_hidden_partitions(df))
+        if not self.partition_by:
+            return df.write.mode(mode)
+        cols = self._physical_partition_cols()
+        if cluster:
+            df = df.hint("rebalance", *cols)
+        return df.write.mode(mode).partitionBy(*cols)
 
     def create_empty(self, schema, metrics: dict | None = None) -> None:
         """writers/writer.py:142-155 ``_create_table_by_scd_type``."""
@@ -2444,10 +2463,11 @@ class ParquetTable:
     def _amend_last_commit_metrics(self, extra: dict) -> None:
         """Merge ``extra`` into the latest commit record's metrics —
         for values (e.g. footer-derived deltas) only computable after
-        the commit landed. Atomic same-file rewrite via rename."""
+        the commit landed. Atomic same-file rewrite via rename. The
+        record is picked by ``_record_names`` — a raw directory sort
+        would pick ``_checkpoint.*.json`` (``_`` sorts after digits)."""
         d = self._log_dir()
-        names = sorted(os.listdir(d))
-        path = os.path.join(d, names[-1])
+        path = os.path.join(d, self._record_names()[-1])
         with open(path) as f:
             rec = json.load(f)
         rec["metrics"] = {**rec.get("metrics", {}), **extra}
@@ -2497,6 +2517,13 @@ class ParquetTable:
         Replaced partition dirs are retained under ``_history/pre{seq}``
         so ``as_of`` still works.
 
+        The staged write clusters rows by the partition columns first
+        (``_writer(cluster=True)``): a touched partition below the
+        advisory size is rewritten as ONE file, whatever the number of
+        write tasks upstream (a 16-bucket streaming merge wrote ~70
+        files per commit without it, 16 with it). ``overwrite()`` is
+        exempt — compaction and z-order choose their own file layout.
+
         ``extra_touched`` lists partition dirs (``col=value`` relative
         paths) that the commit logically touches even if ``df`` carries
         no rows for them — e.g. a merge whose delete feed empties a
@@ -2525,7 +2552,7 @@ class ParquetTable:
         self._enforce_constraints(df)
         staging = f"{self.path}.__staging__{uuid.uuid4().hex[:8]}"
         try:
-            self._writer(df, "overwrite").parquet(staging)
+            self._writer(df, "overwrite", cluster=True).parquet(staging)
             staged_files = self._data_files(staging)
             staged = sorted({os.path.dirname(rel) for rel in staged_files})
             touched = sorted(set(staged) | set(extra_touched or []))

@@ -102,8 +102,9 @@ def foreach_batch_scd_merge(
     key-hash-bucketed target gets the partition-scoped commit path —
     each micro-batch reads and rewrites only the buckets it touches
     (O(touched data), the property that keeps a long-running stream
-    from rewriting the whole table every trigger) — and an unbucketed
-    target gets the staged full-state swap.
+    from rewriting the whole table every trigger) and, its rows being
+    clustered by bucket before the write, leaves one file per touched
+    bucket — and an unbucketed target gets the staged full-state swap.
 
     ``cdf_table`` (SCD1 only) additionally appends each micro-batch's
     Change Data Feed — the ``cdc.change_data_feed`` rows the merge
@@ -122,12 +123,14 @@ def foreach_batch_scd_merge(
     (``batch_id % N == 0``, skipping batch 0), after the state commit,
     the callback runs ``table.optimize(**optimize_kwargs)`` — the
     composite whose fixed ordering (compact/z-order → bloom rebuild →
-    vacuum) keeps point lookups working right after the rewrite. This
-    is what bounds the table's file count over a long-running stream:
-    without it every micro-batch's bucket rewrite adds files until the
-    scan is metadata-bound. ``batch_id`` is the checkpointed epoch id,
-    so the cadence survives restarts, and a replayed maintenance batch
-    just re-compacts already-compact files (idempotent).
+    vacuum) keeps point lookups working right after the rewrite. A
+    bucket rewrite already leaves one file per touched bucket, so a
+    bucketed table's file count no longer grows per trigger; the
+    cadence bin-packs the files an initial load or full-state swap
+    leaves and vacuums the history each rewrite retains. ``batch_id``
+    is the checkpointed epoch id, so the cadence survives restarts, and
+    a replayed maintenance batch just re-compacts already-compact files
+    (idempotent).
     """
     from data_ingestion_framework_spark.operators.cdc import change_data_feed
     from data_ingestion_framework_spark.operators.scd import dedupe_latest

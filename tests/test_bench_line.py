@@ -164,3 +164,24 @@ def test_load_previous_timings_reads_real_artifacts():
     prev = load_previous_timings(repo, 0.1)
     assert prev, "no baseline parsed from the committed BENCH_r*.json"
     assert all(isinstance(v, float) for v in prev.values())
+
+
+def test_detail_records_persist_to_bench_detail_path(tmp_path):
+    """``BENCH_DETAIL_PATH`` persists the detail records stdout's
+    capture tail drops (the executor-time line sits before the long
+    rep-samples line); unset or empty writes nothing."""
+    from bench import write_detail_records
+
+    records = [
+        {"metric_detail": "per_query_executor_task_sec",
+         "queries_exec_sec": {"q": 1.25}},
+        {"metric_detail": "per_query_rep_samples",
+         "queries_reps": {"q": [0.5, 0.4]}, "reps_per_query": 2},
+    ]
+    out = tmp_path / "detail.json"
+    write_detail_records(records, str(out))
+    assert json.loads(out.read_text()) == records
+    assert [p.name for p in tmp_path.iterdir()] == ["detail.json"]
+    write_detail_records(records, None)
+    write_detail_records(records, "")
+    assert [p.name for p in tmp_path.iterdir()] == ["detail.json"]

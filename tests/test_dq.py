@@ -1,8 +1,10 @@
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import Row
 
 from data_ingestion_framework_spark.operators import dq
+from data_ingestion_framework_spark.sinks.audit import reconcile_counts
 
 
 def test_row_local_rules(spark):
@@ -229,3 +231,30 @@ def test_exact_percentiles_match_python_witness(spark):
         pass
     empty = spark.createDataFrame([], "x int")
     assert exact_percentiles(empty, "x", [(1, 2)]).count() == 0
+
+
+def test_custom_sql_rule_passes_only_on_zero_rows(spark):
+    """``custom_sql`` (dq/dq.py:52-59): the rule's query selects the
+    violating rows, so it passes iff that query returns none."""
+    spark.createDataFrame(
+        [Row(id=1, qty=5), Row(id=2, qty=-1), Row(id=3, qty=-7)]
+    ).createOrReplaceTempView("dq_custom_sql_t")
+
+    def passes(where: str) -> bool:
+        sql = f"SELECT * FROM dq_custom_sql_t WHERE {where}"
+        return dq.run_custom_sql_rule(spark, dq.DQRule("r_sql", "custom_sql", sql=sql))
+
+    assert passes("qty > 100")  # 0 rows
+    assert not passes("id = 2")  # 1 row
+    assert not passes("qty < 0")  # 2 rows
+
+
+def test_reconcile_counts_match_and_mismatch(spark):
+    """Count reconciliation (Raw-To-Curated-Material_Dim.py:188-196):
+    silent on a match, raises naming the label and both counts."""
+    df = spark.range(3)
+    reconcile_counts(df, 3, "silver")
+    with pytest.raises(AssertionError, match=r"\[silver\]: expected 4, got 3"):
+        reconcile_counts(df, 4, "silver")
+    with pytest.raises(AssertionError, match="failed: expected 0, got 3"):
+        reconcile_counts(df, 0)

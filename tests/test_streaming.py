@@ -218,6 +218,45 @@ def test_foreach_batch_merge_bucketed_partition_scoped(spark, tmp_path):
     assert got[3] == "v3b" and got[4] == "v4" and len(got) == 100
 
 
+def test_stream_merge_triggers_keep_one_file_per_touched_bucket(spark, tmp_path):
+    """Each micro-batch's partition-scoped commit writes one file per
+    bucket it touches, so across three triggers that touch every bucket
+    the table's file count stays at the bucket count instead of growing
+    by (write tasks x buckets) per trigger."""
+    from data_ingestion_framework_spark.sinks.writers import BUCKET_COL, batch_write
+
+    table = ParquetTable(spark, str(tmp_path / "silver_c"), partition_by=[BUCKET_COL])
+    batch_write(
+        spark.createDataFrame(
+            [Row(pk=i, val=f"v{i}", mtime=T) for i in range(40)],
+            "pk int, val string, mtime timestamp",
+        ),
+        table, mode="merge", key_cols=["pk"], order_col="mtime",
+        scd_type=1, num_buckets=4,
+    )
+    landing = tmp_path / "landing_c"
+    for n in range(1, 4):
+        _stage_files(spark, landing, [[
+            Row(pk=k, val=f"t{n}", mtime=T + dt.timedelta(days=n))
+            for k in range(10 * n, 10 * n + 30)
+        ]])
+        stream = read_file_stream(
+            spark, str(landing), "parquet", control_columns=False
+        )
+        foreach_batch_scd_merge(
+            stream, table, ["pk"], "mtime", str(tmp_path / "ckpt_c"),
+            scd_type=1,
+        )
+        last = table.last_commit()
+        assert last["op"] == "overwrite_partitions"
+        touched = last["metrics"]["touched_partitions"]
+        assert len(touched) == 4
+        assert table.file_count() == len(touched)
+    got = {r["pk"]: r["val"] for r in table.read().collect()}
+    assert len(got) == 60  # keys 40..59 inserted by triggers 2 and 3
+    assert (got[5], got[15], got[25], got[35]) == ("v5", "t1", "t2", "t3")
+
+
 def test_stream_merge_bucketed_with_optimize_cadence(spark, tmp_path):
     """optimize_every + bucketed target compose end-to-end: a stream of
     micro-batches commits partition-scoped merges, the N-th batch runs

@@ -188,6 +188,22 @@ def test_delete_where_erases_and_records(spark, tmp_path):
     assert len(t.history()) == before
 
 
+def test_delete_metrics_amend_the_record_not_the_log_checkpoint(spark, tpath):
+    """The post-commit ``rows_deleted`` amend targets the delete's own
+    commit record even once a log checkpoint exists (every 10th
+    commit): ``_checkpoint.*.json`` sorts after the digit-named records,
+    so a raw directory sort would amend the checkpoint instead."""
+    t = ParquetTable(spark, tpath)
+    for i in range(11):
+        t.append(spark.createDataFrame([Row(a=i)]))
+    ckpts = [n for n in os.listdir(t._log_dir()) if n.startswith("_checkpoint.")]
+    assert ckpts == ["_checkpoint.00000010.json"]
+    assert t.delete_where("a = 3") == 1
+    assert t.last_commit()["op"] == "delete"
+    assert t.last_commit()["metrics"] == {"rows_deleted": 1}
+    assert "metrics" not in t._latest_checkpoint()
+
+
 def test_delete_where_null_predicate_rows_survive(spark, tmp_path):
     """Rows where the predicate is NULL are NOT deleted (SQL DELETE
     semantics: only predicate=TRUE rows go)."""

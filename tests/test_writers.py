@@ -5,14 +5,18 @@ the IE dual-target (current + history) merge with a delete feed
 from __future__ import annotations
 
 import datetime as dt
+import os
 
+import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from data_ingestion_framework_spark.sinks.writers import (
+    BUCKET_COL,
     batch_write,
     ie_dual_target_merge,
     ordered_base_paths,
+    replay_merge_by_source_dir,
 )
 from data_ingestion_framework_spark.sources.tablestore import ParquetTable
 
@@ -556,3 +560,149 @@ def test_merge_into_with_schema_evolution(spark, tmp_path):
     rows = {r["pk"]: (r["v"], r["note"]) for r in tb.read().collect()}
     assert rows[1] == (11, "x")
     assert rows[5] == (50, None)  # untouched bucket, old-schema file
+
+
+# -- clustered partitioned commits -------------------------------------------
+
+
+def _advisory_bytes(spark) -> int:
+    raw = spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
+    return spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(raw)
+
+
+def _state(t, cols):
+    return sorted(repr(r) for r in t.read().select(*cols).collect())
+
+
+@pytest.mark.parametrize("scd_type", [1, 2])
+def test_bucketed_merge_writes_one_file_per_touched_bucket(spark, tmp_path, scd_type):
+    """A partition-scoped merge clusters its rows by bucket before the
+    write, so every touched bucket (all far below the advisory size)
+    holds exactly one file afterwards — not one per write task — and
+    the merged state equals the same merge into an unbucketed table."""
+    initial = spark.createDataFrame(
+        [Row(pk=i, val=f"v{i}", mtime=T0) for i in range(400)],
+        "pk int, val string, mtime timestamp",
+    )
+    # updates and inserts over every bucket, spread across 4 input splits
+    batch = spark.createDataFrame(
+        [Row(pk=i, val=f"u{i}", mtime=T1) for i in range(0, 600, 3)],
+        "pk int, val string, mtime timestamp",
+    ).repartition(4)
+    bucketed = ParquetTable(spark, f"{tmp_path}/b", partition_by=[BUCKET_COL])
+    flat = ParquetTable(spark, f"{tmp_path}/flat")
+    for t, kw in ((bucketed, {"num_buckets": 16}), (flat, {})):
+        batch_write(initial, t, mode="merge", key_cols=["pk"],
+                    order_col="mtime", scd_type=scd_type, **kw)
+        batch_write(batch, t, mode="merge", key_cols=["pk"],
+                    order_col="mtime", scd_type=scd_type)
+
+    last = bucketed.last_commit()
+    assert last["op"] == "overwrite_partitions"
+    touched = last["metrics"]["touched_partitions"]
+    assert len(touched) == 16
+    files = _files_by_partition(bucketed)
+    advisory = _advisory_bytes(spark)
+    for part in touched:
+        assert len(files[part]) == 1, (part, files[part])
+        size = sum(
+            os.path.getsize(os.path.join(bucketed.path, f)) for f in files[part]
+        )
+        assert size < advisory
+    assert bucketed.file_count() == 16
+
+    cols = sorted(flat.read().columns)
+    assert BUCKET_COL not in cols
+    assert _state(bucketed, cols) == _state(flat, cols)
+
+
+def _write_plans(monkeypatch, action) -> list[str]:
+    """Optimized plans of the frames ``action()`` writes via ``.parquet()``."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    plans: list[str] = []
+    orig = DataFrameWriter.parquet
+
+    def parquet(self, path, *args, **kwargs):
+        plans.append(self._df._jdf.queryExecution().optimizedPlan().toString())
+        return orig(self, path, *args, **kwargs)
+
+    with monkeypatch.context() as m:
+        m.setattr(DataFrameWriter, "parquet", parquet)
+        action()
+    return plans
+
+
+def _rebalanced(plans) -> bool:
+    return any("RebalancePartitions" in p for p in plans)
+
+
+def test_only_partition_scoped_commits_cluster(spark, tmp_path, monkeypatch):
+    """From a 4-split input, ``overwrite_partitions`` leaves one file per
+    touched partition; partitioned ``append`` keeps one file per (write
+    task, partition); ``overwrite()`` keeps the caller's layout
+    (compact's coalesce, z-order's range sort) and is not rebalanced."""
+    df = spark.range(0, 64, 1, 4).selectExpr(
+        "id", "CAST(id % 4 AS INT) AS b", "CAST(id % 8 AS INT) AS c"
+    )
+    part = ParquetTable(spark, f"{tmp_path}/p", partition_by=["b"])
+    flat = ParquetTable(spark, f"{tmp_path}/f")
+
+    assert not _rebalanced(_write_plans(monkeypatch, lambda: part.append(df)))
+    files = _files_by_partition(part)
+    assert sorted(files) == ["b=0", "b=1", "b=2", "b=3"]
+    assert all(len(v) == 4 for v in files.values())
+
+    assert _rebalanced(_write_plans(
+        monkeypatch, lambda: part.overwrite_partitions(df.where("b IN (1, 2)"))
+    ))
+    files = _files_by_partition(part)
+    assert [len(files[p]) for p in sorted(files)] == [4, 1, 1, 4]
+
+    assert not _rebalanced(_write_plans(
+        monkeypatch, lambda: part.compact(target_files=2)
+    ))
+    assert part.file_count() <= 2 * 4
+    assert not _rebalanced(_write_plans(
+        monkeypatch, lambda: part.compact(target_files=2, zorder_by=["id", "c"])
+    ))
+    assert not _rebalanced(_write_plans(monkeypatch, lambda: flat.append(df)))
+    assert sorted(r["id"] for r in part.read().collect()) == list(range(64))
+
+
+def test_replay_merge_by_source_dir_bucketed(spark, tmp_path):
+    """Per-source-directory replay in mtime order into a BUCKETED target:
+    the directories land out of name order, so the later directory's
+    version must win, every replayed batch commits partition-scoped,
+    and each commit leaves one file per touched bucket."""
+    t = ParquetTable(spark, f"{tmp_path}/b", partition_by=[BUCKET_COL])
+    batch_write(
+        spark.createDataFrame(
+            [Row(pk=i, val=f"v{i}", mtime=T0) for i in range(40)],
+            "pk int, val string, mtime timestamp",
+        ),
+        t, mode="merge", key_cols=["pk"], order_col="mtime", scd_type=1,
+        num_buckets=4,
+    )
+    # "a" is the NEWER directory: name order would replay it first
+    for d, ts, tag in (("b", T1, "old"), ("a", T2, "new")):
+        spark.createDataFrame(
+            [Row(pk=i, val=f"{tag}{i}", mtime=ts) for i in range(0, 20)],
+            "pk int, val string, mtime timestamp",
+        ).coalesce(1).write.mode("overwrite").parquet(f"{tmp_path}/land/{d}")
+    src = spark.read.parquet(f"{tmp_path}/land/*").select(
+        "*",
+        F.col("_metadata.file_path").alias("file_path"),
+        F.col("mtime").alias("file_modification_time"),
+    )
+    replay_merge_by_source_dir(src, t, ["pk"], scd_type=1)
+
+    replays = t.history()[-2:]
+    assert [h["op"] for h in replays] == ["overwrite_partitions"] * 2
+    files = _files_by_partition(t)
+    for part in replays[-1]["metrics"]["touched_partitions"]:
+        assert len(files[part]) == 1
+    got = {r["pk"]: r["val"] for r in t.read().collect()}
+    assert len(got) == 40
+    assert all(got[i] == f"new{i}" for i in range(20))
+    assert all(got[i] == f"v{i}" for i in range(20, 40))
