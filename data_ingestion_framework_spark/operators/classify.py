@@ -70,6 +70,7 @@ from pyspark.sql import functions as F
 
 from data_ingestion_framework_spark.operators.skew import spread_for_compute
 from data_ingestion_framework_spark.operators.text import normalize_text
+from data_ingestion_framework_spark.session import local_frame
 
 #: Weight fixed-point scale: 1 unit = 1e-6 of real weight.
 UNIT_SCALE = 10**6
@@ -403,7 +404,7 @@ def _nonzero_weight_frame(triples: DataFrame, w: list[int]) -> DataFrame:
     the dot; a left join + coalesce(0) restores them exactly)."""
     spark = triples.sparkSession
     nz = [(j, int(u)) for j, u in enumerate(w) if u != 0]
-    return spark.createDataFrame(nz, "bucket bigint, __w bigint")
+    return local_frame(spark, nz, "bucket bigint, __w bigint")
 
 
 def _sparse_scores_units_frame(
@@ -654,7 +655,7 @@ def _gd_train_sparse_distributed_with_stats(
         "gd_train_sparse_distributed gradient",
     )
     spark = triples.sparkSession
-    wdf = spark.createDataFrame([], "bucket bigint, __w bigint")
+    wdf = local_frame(spark, [], "bucket bigint, __w bigint")
     # max|w| of the empty frame is 0 by construction (r15 opt) — each
     # iteration below refreshes it from the fused checkpoint+agg job
     maxw = 0
@@ -1009,7 +1010,7 @@ def temperature_fit(
             "2^53 — the double conversion would round"
         )
     spark = scored.sparkSession
-    tdf = F.broadcast(spark.createDataFrame(tl, "tn int, td int"))
+    tdf = F.broadcast(local_frame(spark, tl, "tn int, td int"))
     j = base.crossJoin(tdf)
     z = (F.col("__zu") * F.col("td")).cast("double") / (
         F.col("tn").cast("double") * F.lit(float(UNIT_SCALE))

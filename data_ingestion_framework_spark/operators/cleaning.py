@@ -14,6 +14,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from data_ingestion_framework_spark.session import local_frame
+
 from .skew import spread_for_compute
 from .text import normalize_text
 
@@ -132,7 +134,8 @@ def build_gram_bloom(
     bitmap = [0] * (m_bits // 64)
     for r in words:
         bitmap[r["__w"]] = r["__bits"]
-    return grams.sparkSession.createDataFrame(
+    return local_frame(
+        grams.sparkSession,
         [(bitmap,)], "bloom array<bigint>"
     )
 

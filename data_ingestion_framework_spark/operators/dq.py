@@ -26,6 +26,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from data_ingestion_framework_spark.session import local_frame
+
 VALID_FLAG = "data_quality_valid_flag"
 RESULT_ARRAY = "data_quality_result_array"
 
@@ -425,7 +427,8 @@ def exact_percentiles(
     )
     ranked, total = exact_cumulative_counts(vals, "v", "__c", "__hi")
     spark = df.sparkSession
-    targets = spark.createDataFrame(
+    targets = local_frame(
+        spark,
         [
             (num, den, max(1, (num * total + den - 1) // den))
             for num, den in fractions

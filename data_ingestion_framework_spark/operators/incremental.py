@@ -33,6 +33,7 @@ import os
 
 from pyspark.sql import functions as F
 
+from data_ingestion_framework_spark.session import local_frame
 from data_ingestion_framework_spark.sources.tablestore import ParquetTable
 
 #: measure fn -> (partial aggregation, merge aggregation). Partial count
@@ -186,7 +187,8 @@ def _refresh_partition_scoped(
         for d in changed:
             parts = dict(seg.split("=", 1) for seg in d.split(os.sep))
             key_rows.append([parts[c] for c in base.partition_by])
-        keys = spark.createDataFrame(
+        keys = local_frame(
+            spark,
             key_rows, ", ".join(f"{c} string" for c in base.partition_by)
         ).select(
             *[

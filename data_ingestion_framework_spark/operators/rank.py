@@ -37,6 +37,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from data_ingestion_framework_spark.session import local_frame
+
 
 def exact_cumulative_counts(
     per: DataFrame,
@@ -79,7 +81,7 @@ def exact_cumulative_counts(
         offsets.append((int(row["__pid"]), running))
         running += int(row["__sub"])
     spark = per.sparkSession
-    off = spark.createDataFrame(offsets, "__pid int, __off bigint")
+    off = local_frame(spark, offsets, "__pid int, __off bigint")
     w = (
         W.partitionBy("__pid")
         .orderBy(value_col)

@@ -18,6 +18,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from data_ingestion_framework_spark.session import local_frame
+
 
 def _to_double(arr: Column) -> Column:
     return F.transform(arr, lambda x: x.cast("double"))
@@ -2274,10 +2276,12 @@ def ann_ndcg(
 
     disc = ndcg_discounts(k)
     spark = ann.sparkSession
-    disc_df = spark.createDataFrame(
+    disc_df = local_frame(
+        spark,
         [(i, Decimal(w)) for i, w in disc], "rank int, w decimal(14,12)"
     )
-    pref_df = spark.createDataFrame(
+    pref_df = local_frame(
+        spark,
         [(n, Decimal(s)) for n, s in ndcg_idcg_prefix(k)],
         "__n int, __idcg decimal(20,12)",
     )

@@ -14,6 +14,7 @@ from pyspark.sql import types as T
 from pyspark.sql.window import Window as W
 
 from data_ingestion_framework_spark.operators.skew import spread_for_compute
+from data_ingestion_framework_spark.session import local_frame
 
 #: Small deterministic English stopword set for the n-gram/stopword
 #: language heuristic and quality ratios.
@@ -1263,8 +1264,8 @@ def bpe_train_merges(
             .localCheckpoint(eager=False)
         )
     spark = df.sparkSession
-    merge_df = spark.createDataFrame(
-        merges, "step int, left string, right string, pair_freq bigint"
+    merge_df = local_frame(
+        spark, merges, "step int, left string, right string, pair_freq bigint"
     )
     if return_vocab:
         vocab = words.select("w", F.size("syms").cast("bigint").alias("n_sym"))
@@ -1353,7 +1354,8 @@ def substring_vocab(
             "eager collect is only sound for vocabulary-sized outputs"
         )
     kept.sort(key=lambda r: (-r["__f"], r["piece"]))
-    return df.sparkSession.createDataFrame(
+    return local_frame(
+        df.sparkSession,
         [(r["piece"], i) for i, r in enumerate(kept, 1)],
         "piece string, cost_units bigint",
     )
@@ -1727,7 +1729,8 @@ def prune_vocab_bottom(
     n_drop = (len(multi) * prune_num) // prune_den
     multi.sort(key=lambda r: (r["piece_count"], r[piece_col]))
     kept = multi[n_drop:] + singles
-    return vocab.sparkSession.createDataFrame(
+    return local_frame(
+        vocab.sparkSession,
         [(r[piece_col], r[cost_col], r["piece_count"]) for r in kept],
         f"{piece_col} string, {cost_col} bigint, piece_count bigint",
     )

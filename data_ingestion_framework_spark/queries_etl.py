@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 from data_ingestion_framework_spark.operators import scd
 from data_ingestion_framework_spark.operators.multimodal import pack_media
 from data_ingestion_framework_spark.registry import bench_query, load
+from data_ingestion_framework_spark.session import local_frame
 
 T0 = "2024-01-01 00:00:00"
 T1 = "2024-01-02 00:00:00"
@@ -1095,7 +1096,8 @@ def orders_minmax_metadata(spark, sf_dir):
     n = t.count_rows()
     kmin, kmax = t.column_min_max("o_orderkey")
     pmin, pmax = t.column_min_max("o_totalprice")
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(n, kmin, kmax, float(pmin), float(pmax))],
         "n_rows bigint, min_key bigint, max_key bigint, "
         "min_price double, max_price double",
@@ -1677,7 +1679,8 @@ def orders_rename_state(spark, sf_dir):
     t.rename_column("o_orderkey", "pk")
     t.delete_where("price >= 250000")
     t.append(
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [(900000001, 1, 42.5)],
             "pk bigint, customer bigint, price double",
         )

@@ -18,6 +18,7 @@ from pyspark.sql.window import Window as W
 
 from data_ingestion_framework_spark.operators import dedup, similarity, text
 from data_ingestion_framework_spark.registry import ORACLES, bench_query, load
+from data_ingestion_framework_spark.session import local_frame
 
 
 # ---------------------------------------------------------------------------
@@ -7575,7 +7576,8 @@ def embeddings_mmr_select(spark, sf_dir):
         lam_den=2,
         exclude_ids=[0],
     )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (p["rank"], p["id"], p["rel_units"], p["max_prev_sim_units"])
             for p in picks

@@ -10,7 +10,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 #: Defaults chosen for local[N] testing but written so the same code
 #: scales: AQE handles runtime coalescing and skew joins on a real
@@ -73,6 +73,52 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
+    """A DataFrame over driver-built ``rows`` that lives in the JVM as a
+    ``LocalRelation``: the rows are shipped once as an Arrow table, so
+    no action on the frame starts a Python worker and its plan carries
+    no lineage (``createDataFrame(<list>)`` builds a Python-pickled RDD
+    instead, ``Scan ExistingRDD``, whose every action runs Python-worker
+    tasks). Values are identical to ``createDataFrame(rows, schema)``:
+    ``schema`` is a ``StructType`` or a DDL string; rows are tuples or
+    ``Row`` objects (positional, as ``createDataFrame`` reads them) or
+    dicts (by name); naive ``TIMESTAMP`` values are read in the local
+    time zone, as ``createDataFrame`` reads them. An empty ``rows``
+    gives an empty frame of ``schema``. Frames above
+    ``spark.sql.execution.arrow.localRelationThreshold`` (48 MB by
+    default) become an Arrow-batch RDD instead, still without Python
+    workers."""
+    import datetime
+
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import TimestampType, _parse_datatype_string
+
+    if isinstance(schema, str):
+        schema = _parse_datatype_string(schema)
+    names = schema.fieldNames()
+    cols: list[list] = [[] for _ in names]
+    for r in rows:
+        if isinstance(r, dict):
+            r = [r.get(n) for n in names]
+        for col, v in zip(cols, r):
+            col.append(v)
+    for col, f in zip(cols, schema.fields):
+        if isinstance(f.dataType, TimestampType):
+            col[:] = [
+                v.astimezone()
+                if isinstance(v, datetime.datetime) and v.tzinfo is None
+                else v
+                for v in col
+            ]
+    arrow = to_arrow_schema(schema)
+    table = pa.Table.from_arrays(
+        [pa.array(col, type=f.type) for col, f in zip(cols, arrow)],
+        schema=arrow,
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def set_session_timezone(spark: SparkSession, tz: str) -> None:

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from data_ingestion_framework_spark.session import local_frame
 from data_ingestion_framework_spark.sources.tablestore import ParquetTable
 
 AUDIT_SCHEMA = T.StructType(
@@ -75,7 +76,10 @@ class AuditLogger:
         base_file_path: str = "",
     ) -> None:
         """One audit row per operation (audit/auditlogs.py:16-24).
-        ``info`` is JSON-serialized into ``audit_info``."""
+        ``info`` is JSON-serialized into ``audit_info``. The row is a
+        ``local_frame`` (a JVM ``LocalRelation``), so writing it starts
+        no Python worker, and the table append plans from the logged
+        schema, so the only Spark job is the write itself."""
         row = Row(
             table_name=table_name,
             audit_operation=operation,
@@ -85,7 +89,7 @@ class AuditLogger:
             job_id=self.job_id,
             base_file_path=base_file_path,
         )
-        df = self.spark.createDataFrame([row], AUDIT_SCHEMA).withColumn(
+        df = local_frame(self.spark, [row], AUDIT_SCHEMA).withColumn(
             "audit_timestamp", F.current_timestamp()
         )
         if self.table is not None:

@@ -50,6 +50,7 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from data_ingestion_framework_spark.session import local_frame
 from data_ingestion_framework_spark.sources.tablestore import ParquetTable
 
 _WS = r"\s+"
@@ -383,7 +384,8 @@ def execute_statement(
             }
             for r in t.history()
         ]
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             rows, "version long, timestamp double, operation string, rows_written long"
         )
 
@@ -391,7 +393,11 @@ def execute_statement(
     if m:
         t = _resolve(spark, m.group(1), tables)
         d = t.detail()
-        return spark.createDataFrame([{k: str(v) for k, v in d.items()}])
+        return local_frame(
+            spark,
+            [{k: str(v) for k, v in d.items()}],
+            ", ".join(f"`{k}` string" for k in sorted(d)),
+        )
 
     if re.match(r"SELECT\b|WITH\b", s, re.I):
         # register every handed-in table as a view; rewrite time-travel

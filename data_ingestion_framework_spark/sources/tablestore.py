@@ -52,11 +52,18 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from data_ingestion_framework_spark.session import local_frame
 
 LOG_DIR = "_commits"
 HIST_DIR = "_history"
 PROPS_FILE = "_table.json"
 DV_PTR = "_dv_ptr"
+#: footer key under which Spark's parquet writer stores the row schema
+_SPARK_ROW_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+#: deletion-vector sidecar rows (see ``delete_where_dv``)
+_DV_SCHEMA = "file_name string, row_index bigint, dv_seq bigint"
 #: table-lifecycle sidecars the overwrite swap carries into the NEW
 #: root (everything else in the old root is snapshot state and retires
 #: to _history): the commit log, retained history, properties, and the
@@ -73,6 +80,20 @@ class CheckConstraintViolation(ValueError):
 class ConcurrentCommitError(RuntimeError):
     """Another writer took this commit seq — put-if-absent arbitration
     (``_record_commit``) refused to overwrite its record."""
+
+
+def _keep_column_order(table_schema: str, file_schema: str) -> str:
+    """``table_schema`` when ``file_schema`` (both Spark schema JSON)
+    holds the same columns with the same types in any order, else
+    ``file_schema``."""
+
+    def cols(s: str) -> list:
+        return sorted(
+            json.dumps([f["name"], f["type"]], sort_keys=True)
+            for f in json.loads(s)["fields"]
+        )
+
+    return table_schema if cols(table_schema) == cols(file_schema) else file_schema
 
 
 def _is_hidden(rel: str) -> bool:
@@ -179,8 +200,6 @@ class ParquetTable:
                 "column-mapped, or generated-column tables — rewrite "
                 "with overwrite() instead"
             )
-        from pyspark.sql import types as T
-
         by_name = dict(cur_t)
         for f in changed:
             by_name[f.name] = f
@@ -194,9 +213,7 @@ class ParquetTable:
         would fail with PARQUET_COLUMN_DATA_TYPE_MISMATCH."""
         ws = self.properties().get("widened_schema")
         if ws and not self.partition_by:
-            from pyspark.sql import types as T
-
-            r = r.schema(T.StructType.fromJson(ws))
+                r = r.schema(T.StructType.fromJson(ws))
         return r
 
     # -- partition evolution ---------------------------------------------------
@@ -351,21 +368,47 @@ class ParquetTable:
         """PHYSICAL scan of the named live files, partition-era aware —
         the one helper every file-list read path (range_scan,
         read_since, point_lookup) shares so data skipping keeps working
-        across partition evolution."""
-
-        def reader():
-            r = self.spark.read
-            if self.properties().get("schema_evolved"):
-                r = r.option("mergeSchema", "true")
-            return self._apply_read_schema(r)
-
+        across partition evolution. Plans from the logged schema like
+        :meth:`read`."""
         specs = {self._file_spec(f) for f in rels}
         if len(specs) > 1:
-            return self._read_mixed_eras(reader, rels)
-        r = reader()
-        if specs and next(iter(specs)):
+            return self._read_mixed_eras(self._reader, rels)
+        spec = next(iter(specs), ())
+        r = self._reader(self._logged_schema(), spec)
+        if spec:
             r = r.option("basePath", self.path)
         return r.parquet(*[os.path.join(self.path, f) for f in rels])
+
+    def _logged_schema(self) -> T.StructType | None:
+        """The table's row schema from the newest commit record (Delta's
+        ``metaData`` action), or ``None`` when reads must infer it from
+        footers: the record predates logged schemas, or the table is
+        ``schema_evolved`` (footers differ, reads union them) or has a
+        ``widened_schema`` (which pins the read schema itself)."""
+        props = self.properties()
+        if props.get("schema_evolved") or props.get("widened_schema"):
+            return None
+        logged = (self._latest_record() or {}).get("schema")
+        return T.StructType.fromJson(json.loads(logged)) if logged else None
+
+    def _reader(
+        self, logged: T.StructType | None = None, spec: tuple[str, ...] = ()
+    ):
+        """The reader every live-file scan shares. With a ``logged``
+        schema Spark plans without opening a footer (schema inference is
+        a Spark job even for one file); directory partition columns
+        (``spec``) are left out of it, so Spark still types them from
+        the directory names exactly as inference does. Without one,
+        Spark infers: ``schema_evolved`` tables union every footer
+        (``mergeSchema``), everyone else reads one footer."""
+        r = self.spark.read
+        if logged is not None:
+            return r.schema(
+                T.StructType([f for f in logged.fields if f.name not in spec])
+            )
+        if self.properties().get("schema_evolved"):
+            r = r.option("mergeSchema", "true")
+        return self._apply_read_schema(r)
 
     # -- reads ---------------------------------------------------------------
     def exists(self) -> bool:
@@ -381,40 +424,47 @@ class ParquetTable:
         object storage at plan time beyond the log read, and files a
         crashed or in-flight writer left behind are invisible until
         their commit record lands (read isolation the directory scan
-        cannot give)."""
-        def reader():
-            r = self.spark.read
-            if self.properties().get("schema_evolved"):
-                # only tables that took a merge-schema append pay the
-                # multi-footer schema union; everyone else reads one
-                # footer
-                r = r.option("mergeSchema", "true")
-            return self._apply_read_schema(r)
+        cannot give).
 
-        if self.properties().get("strict_files"):
-            last = self._latest_record()
-            files = (last or {}).get("files") or []
-            if not files:
-                return self._from_physical(
-                    reader().parquet(self.path).where(F.lit(False))
-                )
-            if len({self._file_spec(f) for f in files}) > 1:
-                df = self._read_mixed_eras(reader, files)
-            else:
-                r = reader()
-                if self._file_spec(files[0]):
-                    r = r.option("basePath", self.path)
-                df = r.parquet(
-                    *[os.path.join(self.path, f) for f in files]
-                )
+        Planning costs no Spark job when the newest commit record
+        carries the table's schema (Delta's ``metaData`` action, see
+        :meth:`_record_commit`): the scan is declared with it instead of
+        inferring it from a footer. A table with a logged schema and no
+        data files (e.g. a partitioned ``create_empty``) reads as an
+        empty frame of that schema. Reads infer as before when the
+        record has no schema (an older log), the table is
+        ``schema_evolved`` or has a ``widened_schema``, and for
+        mixed-era (partition-evolved) file sets."""
+        logged = self._logged_schema()
+        strict = self.properties().get("strict_files")
+        if strict:
+            files = (self._latest_record() or {}).get("files") or []
         else:
             files = self._data_files()
-            if len({self._file_spec(f) for f in files}) > 1:
-                # partition evolution: live files span layouts a single
-                # directory scan cannot partition-infer — per-era scan
-                df = self._read_mixed_eras(reader, files)
+        if not files and logged is not None:
+            if set(self._identity_partition_cols()) <= set(logged.names):
+                return self._from_physical(local_frame(self.spark, [], logged))
+            # a partitioned table emptied by deletes logged its footer
+            # schema, which has no partition columns — infer as before
+            logged = None
+        if not files and strict:
+            return self._from_physical(
+                self._reader().parquet(self.path).where(F.lit(False))
+            )
+        specs = {self._file_spec(f) for f in files}
+        if len(specs) > 1:
+            # partition evolution: live files span layouts a single
+            # directory scan cannot partition-infer — per-era scan
+            df = self._read_mixed_eras(self._reader, files)
+        else:
+            spec = next(iter(specs), ())
+            r = self._reader(logged, spec)
+            if strict:
+                if spec:
+                    r = r.option("basePath", self.path)
+                df = r.parquet(*[os.path.join(self.path, f) for f in files])
             else:
-                df = reader().parquet(self.path)
+                df = r.parquet(self.path)
         if os.path.isdir(self._dv_dir()):
             df = self._subtract_dv(df, [self._dv_dir()])
         return self._from_physical(df)
@@ -735,7 +785,7 @@ class ParquetTable:
             )
         # validate the type (and the default's castability) loudly now,
         # not at first append
-        probe = self.spark.createDataFrame([], f"`{name}` {dtype}")
+        probe = local_frame(self.spark, [], f"`{name}` {dtype}")
         if default is not None:
             probe.select(F.lit(default).cast(probe.schema[name].dataType))
         added = self._added_columns()
@@ -882,6 +932,11 @@ class ParquetTable:
             return os.path.join(root, gen or "_dv.none")
         return os.path.join(root, "_dv")
 
+    def _read_dv(self, d: str) -> DataFrame:
+        """One deletion-vector sidecar dir, declared with its fixed
+        schema (no footer-inference job)."""
+        return self.spark.read.schema(_DV_SCHEMA).parquet(d)
+
     def _subtract_dv(
         self, df: DataFrame, dv_dirs: list[str], max_seq: int | None = None
     ) -> DataFrame:
@@ -892,7 +947,7 @@ class ParquetTable:
         ``max_seq`` caps which deletes apply (time travel)."""
         dv = None
         for d in dv_dirs:
-            f = self.spark.read.parquet(d)
+            f = self._read_dv(d)
             dv = f if dv is None else dv.unionByName(f)
         if max_seq is not None:
             dv = dv.where(F.col("dv_seq") <= max_seq)
@@ -931,19 +986,14 @@ class ParquetTable:
                 "delete_where (rewrite) instead"
             )
         pred = F.expr(predicate) if isinstance(predicate, str) else predicate
-        r = self.spark.read
-        if self.properties().get("schema_evolved"):
-            # same option every other scan path applies — without it a
-            # predicate on an evolved column is UNRESOLVED_COLUMN
-            r = r.option("mergeSchema", "true")
-        base = r.parquet(self.path).select(
+        base = self._reader(self._logged_schema()).parquet(self.path).select(
             "*",
             F.col("_metadata.file_name").alias("__dv_f"),
             F.col("_metadata.row_index").alias("__dv_p"),
         )
         dvd = self._dv_dir()
         if os.path.isdir(dvd):
-            dv = self.spark.read.parquet(dvd)
+            dv = self._read_dv(dvd)
             cond = (F.col("__dv_f") == dv["file_name"]) & (
                 F.col("__dv_p") == dv["row_index"]
             )
@@ -1237,9 +1287,14 @@ class ParquetTable:
                 return decimal.Decimal(v["v"])
         return v
 
-    def _harvest_file_stats(self, rels: list[str]) -> dict:
-        """Read each file's footer ONCE and return
-        ``{rel: {"rows": n, "cols": {phys_name: {"min","max","nulls"}}}}``.
+    def _harvest_footers(self, rels: list[str]) -> tuple[dict, str | None]:
+        """Read each file's footer ONCE and return ``(stats, schema)``:
+        ``stats`` is
+        ``{rel: {"rows": n, "cols": {phys_name: {"min","max","nulls"}}}}``
+        and ``schema`` is Spark's own row schema (the
+        ``org.apache.spark.sql.parquet.row.metadata`` footer key, the
+        exact string Spark's schema inference returns) of the first file
+        that carries it, ``None`` if none does.
         Column keys are PHYSICAL parquet names (column mapping resolves
         at query time, so a later RENAME COLUMN never invalidates logged
         stats). A bound that can't round-trip JSON (long string, NaN,
@@ -1249,9 +1304,11 @@ class ParquetTable:
         never truncated (a prefix would be an INVALID upper bound)."""
         import pyarrow.parquet as pq
 
-        out = {}
+        out, schema = {}, None
         for rel in rels:
             md = pq.ParquetFile(os.path.join(self.path, rel)).metadata
+            if schema is None:
+                schema = (md.metadata or {}).get(_SPARK_ROW_SCHEMA_KEY)
             cols: dict = {}
             for rg in range(md.num_row_groups):
                 rgm = md.row_group(rg)
@@ -1301,7 +1358,7 @@ class ParquetTable:
                     # not report it (Delta's tightBounds distinction)
                     enc_cols[name]["minTrunc"] = True
             out[rel] = {"rows": md.num_rows, "cols": enc_cols}
-        return out
+        return out, schema.decode() if schema is not None else None
 
     def file_stats(self) -> dict:
         """Per-live-file stats resolved from the commit log: each file's
@@ -1332,7 +1389,7 @@ class ParquetTable:
                     out[rel] = st
         missing = sorted(live - set(out))
         if missing:
-            out.update(self._harvest_file_stats(missing))
+            out.update(self._harvest_footers(missing)[0])
         return out
 
     def _record_commit(
@@ -1341,10 +1398,22 @@ class ParquetTable:
         metrics: dict | None,
         new_files: list[str] | None = None,
         stats: dict | None = None,
+        schema: str | None = None,
     ) -> dict:
         """Append one commit record. ``rows_written`` comes from parquet
         footers of the files written this commit (control-plane: footer
         reads only, proportional to commit size).
+
+        The record also carries the table's row schema (Delta's
+        ``metaData`` action) so :meth:`read` plans without a schema
+        inference job. It is ``schema`` when given (``create`` logs the
+        declared schema, ``clone`` the source's), else Spark's own row
+        schema from the footer of a file this commit wrote (the read
+        that counts its rows, no extra I/O). Partition columns are
+        directory names, not in that footer. A commit that writes no
+        file carries the previous record's schema forward, and so does
+        one that adds files holding the same columns in another order
+        (the table keeps its column order, as Delta's does).
 
         The record lands via ``os.link`` (fails on an existing name)
         instead of ``os.rename`` (silently replaces) — the same
@@ -1356,6 +1425,7 @@ class ParquetTable:
         a losing writer's data files need operator cleanup) — the
         arbitration turns a silent corruption into a loud error."""
         seq = self._next_seq()
+        prev = self._latest_record() or {}
         if new_files is not None and self.properties().get("strict_files"):
             # log-as-source-of-truth: the new snapshot is the previous
             # record's files plus this commit's, minus files the commit
@@ -1363,17 +1433,21 @@ class ParquetTable:
             # uncommitted file can never enter the log. (A real
             # lakehouse log records removals explicitly; the existence
             # filter is this store's rename-based equivalent.)
-            prev = set((self._latest_record() or {}).get("files") or [])
             files = sorted(
                 f
-                for f in prev | set(new_files)
+                for f in set(prev.get("files") or []) | set(new_files)
                 if os.path.exists(os.path.join(self.path, f))
             )
         else:
             files = self._data_files()
         counted = files if new_files is None else new_files
+        footer_schema = None
         if stats is None:
-            stats = self._harvest_file_stats(counted)
+            stats, footer_schema = self._harvest_footers(counted)
+        if schema is None:
+            schema = footer_schema or prev.get("schema")
+            if footer_schema and prev.get("schema") and set(counted) != set(files):
+                schema = _keep_column_order(prev["schema"], footer_schema)
         rec = {
             "seq": seq,
             "ts": time.time(),
@@ -1382,6 +1456,7 @@ class ParquetTable:
             "metrics": metrics or {},
             "files": files,
             "stats": stats,
+            "schema": schema,
         }
         os.makedirs(self._log_dir(), exist_ok=True)
         tmp = os.path.join(self._log_dir(), f".tmp-{uuid.uuid4().hex[:8]}")
@@ -1481,7 +1556,7 @@ class ParquetTable:
         if dv_dirs:
             dv = None
             for d in dv_dirs:
-                f = self.spark.read.parquet(d)
+                f = self._read_dv(d)
                 dv = f if dv is None else dv.unionByName(f)
             dv = dv.where(F.col("dv_seq") <= seq)
             cond = (F.col("__dv_f") == dv["file_name"]) & (
@@ -1616,7 +1691,7 @@ class ParquetTable:
             # would let clone-side as_of(1)/restore(1) resurrect rows
             # the source deleted before the clone. The sidecar is
             # O(deleted rows), so this is the one non-hardlink copy.
-            self.spark.read.parquet(dvd).withColumn(
+            self._read_dv(dvd).withColumn(
                 "dv_seq", F.lit(0).cast("bigint")
             ).write.parquet(os.path.join(dest_path, "_dv"))
         dst_t = ParquetTable(
@@ -1636,6 +1711,7 @@ class ParquetTable:
             # so the source log's per-file stats are authoritative and
             # the clone commit pays zero footer reads.
             stats=self.file_stats(),
+            schema=(self._latest_record() or {}).get("schema"),
         )
         return dst_t
 
@@ -1859,11 +1935,19 @@ class ParquetTable:
         return df.write.mode(mode).partitionBy(*cols)
 
     def create_empty(self, schema, metrics: dict | None = None) -> None:
-        """writers/writer.py:142-155 ``_create_table_by_scd_type``."""
+        """writers/writer.py:142-155 ``_create_table_by_scd_type``.
+
+        The ``create`` record logs the declared ``schema`` (a
+        ``StructType`` or DDL string). A partitioned table writes no
+        data file (an empty frame makes no partition directory), so the
+        logged schema is what :meth:`read` returns for it until the
+        first write; ``exists()`` stays false until then."""
         if not self.exists():
-            df = self.spark.createDataFrame([], schema)
+            df = local_frame(self.spark, [], schema)
             self._writer(df, "overwrite").parquet(self.path)
-            self._record_commit("create", metrics, new_files=[])
+            self._record_commit(
+                "create", metrics, new_files=[], schema=df.schema.json()
+            )
 
     def append(
         self,
@@ -2094,7 +2178,7 @@ class ParquetTable:
         dvd = self._dv_dir()
         if not os.path.isdir(dvd):
             return
-        live = self.spark.read.parquet(dvd)
+        live = self._read_dv(dvd)
         retired = live.where(F.col("file_name").isin(touched))
         if retired.limit(1).count() > 0:  # sidecar-sized, control-plane
             pre_root = os.path.join(self._hist_dir(), f"pre{seq:08d}")
@@ -2129,7 +2213,8 @@ class ParquetTable:
         file-scoped statement derives touched files and replacement
         rows from. Metadata columns must be materialized at the scan
         (they don't resolve through joins)."""
-        if len(self._live_specs()) > 1:
+        specs = self._live_specs()
+        if len(specs) > 1:
             # a COW rewrite would re-lay touched rows under the CURRENT
             # spec while leaving their untouched file-mates in the old
             # era — legal but surprising; converge first, explicitly
@@ -2138,9 +2223,7 @@ class ParquetTable:
                 "partition-spec eras — run rewrite_to_current_spec() "
                 "(or overwrite()) first"
             )
-        r = self._apply_read_schema(self.spark.read)
-        if self.properties().get("schema_evolved"):
-            r = r.option("mergeSchema", "true")
+        r = self._reader(self._logged_schema(), next(iter(specs), ()))
         if self.properties().get("strict_files"):
             # same log-as-source-of-truth contract as read(): a COW
             # statement must not sweep a crashed writer's stray rows
@@ -2158,7 +2241,7 @@ class ParquetTable:
         )
         dvd = self._dv_dir()
         if os.path.isdir(dvd):
-            dv = self.spark.read.parquet(dvd)
+            dv = self._read_dv(dvd)
             cond = (F.col("__f") == dv["file_name"]) & (
                 F.col("__p") == dv["row_index"]
             )
@@ -2172,7 +2255,7 @@ class ParquetTable:
         dvd = self._dv_dir()
         if os.path.isdir(dvd):
             hit = (
-                self.spark.read.parquet(dvd)
+                self._read_dv(dvd)
                 .where(F.col("file_name").isin(touched))
                 .count()
             )
@@ -2633,9 +2716,7 @@ class ParquetTable:
             # through a select()'s child plan, so filtering `live`
             # directly would silently accept data-column predicates
             # (and match every partition with any qualifying row)
-            tuples = self.spark.createDataFrame(
-                live.collect(), schema=live.schema
-            )
+            tuples = local_frame(self.spark, live.collect(), live.schema)
             try:
                 doomed = tuples.where(pred).collect()
             except AnalysisException:
@@ -2785,9 +2866,8 @@ class ParquetTable:
         files subtracted, column mapping applied — frames handed to
         write paths are always logical (the writes map back to
         physical; mixing namespaces would mis-map chained renames)."""
-        r = self._apply_read_schema(self.spark.read)
-        if self.properties().get("schema_evolved"):
-            r = r.option("mergeSchema", "true")
+        spec = tuple({c for f in rels for c in self._file_spec(f)})
+        r = self._reader(self._logged_schema(), spec)
         df = r.parquet(*[os.path.join(self.path, f) for f in rels]).select(
             "*",
             F.col("_metadata.file_name").alias("__f"),
@@ -2795,7 +2875,7 @@ class ParquetTable:
         )
         dvd = self._dv_dir()
         if os.path.isdir(dvd):
-            dv = self.spark.read.parquet(dvd).where(
+            dv = self._read_dv(dvd).where(
                 F.col("file_name").isin(rels)
             )
             cond = (F.col("__f") == dv["file_name"]) & (
@@ -3264,9 +3344,11 @@ class ParquetTable:
         stale index rather than silently missing rows)."""
         if m_bits & (m_bits - 1):
             raise ValueError("m_bits must be a power of two")
-        r = self.spark.read
-        if self.properties().get("schema_evolved"):
-            r = r.option("mergeSchema", "true")
+        specs = self._live_specs()
+        r = self._reader(
+            self._logged_schema() if len(specs) == 1 else None,
+            next(iter(specs), ()),
+        )
         # raw scan (not read()): _metadata only resolves on the scan
         # frame, before any column-mapping or DV projection. DV'd rows'
         # values may set extra bits — false positives only, which Bloom

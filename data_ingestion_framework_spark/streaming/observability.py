@@ -21,6 +21,8 @@ import json
 
 from pyspark.sql.streaming import StreamingQueryListener
 
+from data_ingestion_framework_spark.session import local_frame
+
 def _path_token_in(description: str, path: str) -> bool:
     """True when ``path`` appears in ``description`` as a COMPLETE path
     token — i.e. not extendable to a longer path on EITHER side. Plain
@@ -186,7 +188,7 @@ class ProgressLogger(StreamingQueryListener):
         of crashing on schema enforcement and dropping the buffer."""
         if not self.rows:
             return 0
-        batch = self.spark.createDataFrame(self.rows, PROGRESS_SCHEMA)
+        batch = local_frame(self.spark, self.rows, PROGRESS_SCHEMA)
         n = len(self.rows)
         self.table.append(
             batch, metrics={"progress_events": n}, merge_schema=True

@@ -14,3 +14,43 @@ def spark():
 @pytest.fixture()
 def tmp_table_path(tmp_path):
     return str(tmp_path / "table")
+
+
+@pytest.fixture()
+def launched_jobs(spark):
+    """``with launched_jobs() as ids:`` — after the block, ``ids`` holds
+    the Spark job ids the block's actions launched. The block runs under
+    its own job group; a fence job run afterwards is awaited in the
+    status tracker, so every job-start event of the block (the listener
+    bus delivers them in order) has been counted before ``ids`` is
+    filled."""
+    import contextlib
+    import time
+    import uuid
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    @contextlib.contextmanager
+    def probe():
+        keys = ("spark.jobGroup.id", "spark.job.description")
+        prev = {k: sc.getLocalProperty(k) for k in keys}
+        group = f"launched-jobs-{uuid.uuid4().hex[:8]}"
+        ids: list[int] = []
+        sc.setJobGroup(group, group)
+        try:
+            yield ids
+        finally:
+            sc.setJobGroup(group + "-fence", group)
+            spark.range(1).collect()
+            deadline = time.time() + 30
+            while (
+                not tracker.getJobIdsForGroup(group + "-fence")
+                and time.time() < deadline
+            ):
+                time.sleep(0.05)
+            for k, v in prev.items():
+                sc.setLocalProperty(k, v)
+            ids.extend(tracker.getJobIdsForGroup(group))
+
+    return probe

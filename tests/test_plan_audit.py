@@ -57,16 +57,22 @@ def test_headline_plans_have_no_row_python_and_bounded_nested_loops(spark):
     from tools.plan_audit import audit_query
 
     sf_dir = "/root/testdata/sf0.001"
-    offenders, py_row, one_part = [], [], []
+    offenders, py_row, py_rdd, one_part = [], [], [], []
     for name in HEADLINE:
         r = audit_query(spark, name, sf_dir)
         if r["py_row"]:
             py_row.append(name)
+        if r["py_rdd"]:
+            py_rdd.append(name)
         if r["nested_loop"] and name not in NESTED_LOOP_BY_DESIGN:
             offenders.append(name)
         if r["single_part_win"] and name not in SINGLE_PARTITION_BY_DESIGN:
             one_part.append(name)
     assert not py_row, f"row-at-a-time Python UDF in hot path: {py_row}"
+    assert not py_rdd, (
+        "frame over a Python-pickled RDD (createDataFrame of a Python "
+        f"list) in a headline plan: {py_rdd} — use session.local_frame"
+    )
     assert not offenders, (
         "unexpected nested-loop/cartesian join (quadratic unless one "
         f"side is a 1-row control frame): {offenders} — if intentional, "
@@ -77,6 +83,35 @@ def test_headline_plans_have_no_row_python_and_bounded_nested_loops(spark):
         f"task): {one_part} — use operators/rank.py's range-partitioned "
         "prefix sum, or argue a bound in SINGLE_PARTITION_BY_DESIGN"
     )
+
+
+def test_python_rdd_counter_is_alive(spark):
+    """``py_rdd`` counts a ``createDataFrame(<list>)`` scan — also
+    through a broadcast join and in the AQE-finalized plan — but not a
+    ``localCheckpoint`` scan (same ``Scan ExistingRDD`` node name, no
+    Python) nor a ``local_frame`` (a ``LocalRelation``)."""
+    from pyspark.sql import functions as F
+
+    from data_ingestion_framework_spark.session import local_frame
+    from tools.plan_audit import python_rdd_scans
+
+    def count(df):
+        return python_rdd_scans(df._jdf.queryExecution().executedPlan())
+
+    py = spark.createDataFrame([(1,)], "a int")
+    lf = local_frame(spark, [(1,)], "a int")
+    ck = spark.range(5).withColumnRenamed("id", "a").localCheckpoint(eager=False)
+    assert "Scan ExistingRDD" in ck._jdf.queryExecution().executedPlan().toString()
+    assert (count(py), count(lf), count(ck)) == (1, 0, 0)
+    joined = (
+        spark.range(10)
+        .withColumnRenamed("id", "a")
+        .join(F.broadcast(py), "a")
+        .unionByName(ck.join(lf, "a"))
+    )
+    assert count(joined) == 1
+    joined.collect()
+    assert count(joined) == 1
 
 
 def test_single_partition_window_counter_is_alive(spark):

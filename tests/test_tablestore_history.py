@@ -2105,3 +2105,297 @@ def test_add_column_default_on_partitioned_table(spark, tmp_path):
     t.delete_where(F.col("k") == 1)
     got = sorted((r["k"], r["tier"]) for r in t.read().collect())
     assert got == [(2, None), (3, "std")]
+
+
+# -- the table schema in the commit log ---------------------------------------
+#
+# Every commit record carries the table's row schema (Delta's metaData
+# action), and read() declares it instead of inferring it from a footer
+# (a Spark job). Each layout below must read value-identically to the
+# inferred path, which the tests reach by hiding the logged schema.
+
+_BATTERY = (
+    "k bigint, d decimal(18,4), x double, s string, b binary, dt date, "
+    "ts timestamp, ntz timestamp_ntz, arr array<bigint>, "
+    "m map<string,bigint>, st struct<a:int,b:string>"
+)
+
+
+def _battery(spark, lo: int, hi: int, extra: str = "", extra_of=None):
+    import datetime
+    from decimal import Decimal
+
+    from data_ingestion_framework_spark.session import local_frame
+
+    t0 = datetime.datetime(2024, 2, 28, 22, 30, 0, 123456)
+    rows = []
+    for k in range(lo, hi):
+        null = k % 5 == 4  # a NULL in every nullable column now and then
+        rows.append(
+            (
+                k,
+                None if null else Decimal(k * 1234567) / Decimal(10000),
+                None if null else k * 0.5 - 1.25,
+                None if null else f"s{k}",
+                None if null else bytes([k % 256, 0, 255]),
+                None if null else datetime.date(2024, 2, 27) + datetime.timedelta(days=k % 4),
+                None if null else t0 + datetime.timedelta(hours=5 * k),
+                None if null else t0 - datetime.timedelta(minutes=k),
+                None if null else [k, None, -k],
+                None if null else {"a": k, "b": None},
+                None if null else (k, f"x{k}"),
+            )
+            + ((extra_of(k),) if extra_of else ())
+        )
+    return local_frame(spark, rows, _BATTERY + extra)
+
+
+def _two_commits(spark, path, partition_by=None, extra="", extra_of=None):
+    t = ParquetTable(spark, path, partition_by=partition_by)
+    t.overwrite(_battery(spark, 0, 6, extra, extra_of))
+    t.append(_battery(spark, 6, 11, extra, extra_of))
+    return t
+
+
+def _read(t):
+    return t.read()
+
+
+def _layout_unpartitioned(spark, path):
+    return _two_commits(spark, path), _read
+
+
+def _layout_identity_int(spark, path):
+    return _two_commits(spark, path, ["p"], ", p int", lambda k: k % 3), _read
+
+
+def _layout_identity_numeric_string(spark, path):
+    # "007"-style directory values: Spark types the partition column from
+    # the directory names (int here) on both paths
+    t = _two_commits(spark, path, ["p"], ", p string", lambda k: f"{k % 3:03d}")
+    return t, _read
+
+
+def _layout_identity_date(spark, path):
+    t = _two_commits(spark, path, ["dt"])
+    return t, _read
+
+
+def _layout_days_ts(spark, path):
+    return _two_commits(spark, path, ["days(ts)"]), _read
+
+
+def _layout_bucketed(spark, path):
+    from data_ingestion_framework_spark.session import local_frame
+    from data_ingestion_framework_spark.sinks.writers import BUCKET_COL, batch_write
+
+    schema = "k bigint, v string, d decimal(10,2), ts timestamp, mtime bigint"
+    t = ParquetTable(spark, path, partition_by=[BUCKET_COL])
+    import datetime
+    from decimal import Decimal
+
+    def batch(keys, tag, mtime):
+        return local_frame(
+            spark,
+            [
+                (k, f"{tag}{k}", Decimal(k) / 4, datetime.datetime(2024, 1, 1, k % 24), mtime)
+                for k in keys
+            ],
+            schema,
+        )
+
+    batch_write(batch(range(12), "a", 1), t, mode="merge", key_cols=["k"],
+                order_col="mtime", num_buckets=4)
+    batch_write(batch(range(8, 16), "b", 2), t, mode="merge", key_cols=["k"],
+                order_col="mtime", num_buckets=4)
+    return t, _read
+
+
+def _layout_renamed(spark, path):
+    t = _two_commits(spark, path)
+    t.rename_column("s", "label")
+    return t, _read
+
+
+def _layout_dropped(spark, path):
+    t = _two_commits(spark, path)
+    t.drop_column("x")
+    return t, _read
+
+
+def _layout_deletion_vectors(spark, path):
+    t = _two_commits(spark, path)
+    t.delete_where_dv("k % 3 = 0")
+    return t, _read
+
+
+def _layout_strict_files(spark, path):
+    t = ParquetTable(spark, path, partition_by=["p"])
+    t.set_properties({"strict_files": True})
+    t.overwrite(_battery(spark, 0, 6, ", p int", lambda k: k % 2))
+    t.append(_battery(spark, 6, 11, ", p int", lambda k: k % 2))
+    return t, _read
+
+
+def _layout_read_since(spark, path):
+    t = ParquetTable(spark, path, partition_by=["p"])
+    t.overwrite(_battery(spark, 0, 6, ", p int", lambda k: k % 2))
+    seq = t.last_commit()["seq"]
+    t.append(_battery(spark, 6, 11, ", p int", lambda k: k % 2))
+    t.append(_battery(spark, 11, 14, ", p int", lambda k: k % 2))
+    return t, lambda tbl: tbl.read_since(seq)
+
+
+_LAYOUTS = {
+    f.__name__[len("_layout_"):]: f
+    for f in (
+        _layout_unpartitioned,
+        _layout_identity_int,
+        _layout_identity_numeric_string,
+        _layout_identity_date,
+        _layout_days_ts,
+        _layout_bucketed,
+        _layout_renamed,
+        _layout_dropped,
+        _layout_deletion_vectors,
+        _layout_strict_files,
+        _layout_read_since,
+    )
+}
+
+#: layouts whose reads infer by design: DROP COLUMN flags the table
+#: ``schema_evolved`` (appends after the drop write narrower footers)
+_INFERRED_LAYOUTS = {"dropped"}
+
+
+@pytest.mark.parametrize("layout", sorted(_LAYOUTS))
+def test_logged_schema_read_matches_inferred(
+    spark, tmp_path, monkeypatch, launched_jobs, layout
+):
+    t, read = _LAYOUTS[layout](spark, str(tmp_path / "t"))
+    assert t.last_commit()["schema"]
+    assert (t._logged_schema() is None) == (layout in _INFERRED_LAYOUTS)
+    with launched_jobs() as logged_jobs:
+        logged = read(t)
+    with monkeypatch.context() as m:
+        m.setattr(ParquetTable, "_logged_schema", lambda self: None)
+        with launched_jobs() as inferred_jobs:
+            inferred = read(t)
+    assert inferred_jobs, "the inferred path should open a footer"
+    if layout not in _INFERRED_LAYOUTS:
+        assert logged_jobs == [], "planning a logged-schema read ran a job"
+    assert logged.schema == inferred.schema
+    got, want = logged.collect(), inferred.collect()
+    assert got and sorted(got, key=repr) == sorted(want, key=repr)
+
+
+def test_commit_schema_is_sparks_footer_schema(spark, tpath):
+    """The logged string is the footer's row schema verbatim; commits
+    that write no file carry it forward; an append with the same
+    columns in another order keeps the table's order."""
+    import pyarrow.parquet as pq
+
+    t = ParquetTable(spark, tpath, partition_by=["p"])
+    t.overwrite(spark.range(4).selectExpr("id AS k", "id % 2 AS p", "'a' AS v"))
+    rec = t.last_commit()
+    md = pq.ParquetFile(os.path.join(tpath, rec["files"][0])).metadata.metadata
+    assert rec["schema"] == md[b"org.apache.spark.sql.parquet.row.metadata"].decode()
+    assert [f.name for f in t._logged_schema().fields] == ["k", "v"]
+    t.add_check_constraint("k_pos", "k >= 0")
+    assert t.last_commit()["op"] == "add_constraint"
+    assert t.last_commit()["schema"] == rec["schema"]
+    t.append(spark.range(4, 6).selectExpr("'b' AS v", "id % 2 AS p", "id AS k"))
+    assert t.last_commit()["schema"] == rec["schema"]
+    assert t.read().columns == ["k", "v", "p"]
+    assert sorted(r["k"] for r in t.read().collect()) == list(range(6))
+
+
+def test_record_without_schema_infers(spark, tpath, launched_jobs):
+    """A log written before schemas were logged reads exactly as before
+    (inferred), and the next commit starts logging."""
+    import json
+
+    t = _two_commits(spark, tpath)
+    want = sorted(t.read().collect(), key=repr)
+    for name in t._record_names():
+        f = os.path.join(t._log_dir(), name)
+        with open(f) as fh:
+            rec = json.load(fh)
+        rec.pop("schema")
+        with open(f, "w") as fh:
+            json.dump(rec, fh)
+    assert t._logged_schema() is None
+    with launched_jobs() as ids:
+        df = t.read()
+    assert ids
+    assert sorted(df.collect(), key=repr) == want
+    t.append(_battery(spark, 11, 12))
+    assert t._logged_schema() is not None
+    with launched_jobs() as ids:
+        df = t.read()
+    assert ids == []
+    assert len(df.collect()) == 12
+
+
+def test_schema_evolved_table_keeps_merge_schema(spark, tpath):
+    t = ParquetTable(spark, tpath)
+    t.overwrite(spark.range(3).selectExpr("id AS k"))
+    t.append(spark.range(3, 5).selectExpr("id AS k", "'n' AS extra"), merge_schema=True)
+    assert t.properties()["schema_evolved"] and t._logged_schema() is None
+    got = sorted((r["k"], r["extra"]) for r in t.read().collect())
+    assert got == [(0, None), (1, None), (2, None), (3, "n"), (4, "n")]
+
+
+@pytest.mark.parametrize("partition_by", [["p"], None], ids=["partitioned", "unpartitioned"])
+def test_create_empty_reads_declared_schema(spark, tpath, launched_jobs, partition_by):
+    """A partitioned create_empty writes no data file; its read used to
+    raise UNABLE_TO_INFER_SCHEMA. The create record logs the declared
+    schema, so the empty table reads as an empty frame of it."""
+    from data_ingestion_framework_spark.session import local_frame
+
+    t = ParquetTable(spark, tpath, partition_by=partition_by)
+    t.create_empty("k bigint, v string, p int")
+    assert t.exists() == (partition_by is None)
+    with launched_jobs() as ids:
+        df = t.read()
+    assert ids == []
+    assert df.schema.simpleString() == "struct<k:bigint,v:string,p:int>"
+    assert df.collect() == []
+    t.append(local_frame(spark, [(1, "a", 7)], "k bigint, v string, p int"))
+    assert t.exists()
+    assert [tuple(r) for r in t.read().collect()] == [(1, "a", 7)]
+
+
+def test_uncommitted_files_after_create_read_like_inference(spark, tpath, monkeypatch):
+    """A partitioned create logs the declared schema, partition column
+    included. If data files land without a commit record (an append
+    that crashed before committing), the directory scan still types and
+    places the partition column from the directory names, as inference
+    does (``p=0`` reads back as int, not the declared bigint)."""
+    t = ParquetTable(spark, tpath, partition_by=["p"])
+    t.create_empty("p bigint, k bigint, v string")
+    spark.range(4).selectExpr("id AS k", "'a' AS v", "id % 2 AS p").write.mode(
+        "append"
+    ).partitionBy("p").parquet(tpath)
+    logged = t.read()
+    with monkeypatch.context() as m:
+        m.setattr(ParquetTable, "_logged_schema", lambda self: None)
+        inferred = t.read()
+    assert logged.schema.simpleString() == "struct<k:bigint,v:string,p:int>"
+    assert logged.schema == inferred.schema
+    assert sorted(logged.collect()) == sorted(inferred.collect())
+
+
+def test_emptied_partitioned_table_does_not_drop_partition_columns(spark, tpath):
+    """Deleting every row of a partitioned table leaves no data file and
+    a logged footer schema without the partition column: read() infers
+    as before (and fails to) rather than return an empty frame that
+    silently lacks ``p``."""
+    from pyspark.errors import AnalysisException
+
+    t = ParquetTable(spark, tpath, partition_by=["p"])
+    t.overwrite(spark.range(4).selectExpr("id AS k", "id % 2 AS p"))
+    t.delete_where("k >= 0")
+    assert t._logged_schema().names == ["k"] and not t._data_files()
+    with pytest.raises(AnalysisException, match="UNABLE_TO_INFER_SCHEMA"):
+        t.read()

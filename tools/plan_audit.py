@@ -21,6 +21,14 @@ smallest data suffices) and counts the plan features that decide
 - ``py_row``         BatchEvalPython = row-at-a-time Python UDF — a hot-path
                      bug by this repo's rules (Arrow mapInPandas shows as
                      ``py_arrow`` and is allowed at media edges)
+- ``py_rdd``         ``Scan ExistingRDD`` leaves whose RDD lineage starts in
+                     Python — a ``createDataFrame(<python list>)`` frame,
+                     whose every action runs Python-worker tasks (build
+                     driver rows with ``session.local_frame``, a JVM
+                     ``LocalRelation``). ``localCheckpoint`` scans print
+                     the same node name but run no Python, so this
+                     counter walks the JVM plan (``python_rdd_scans``)
+                     instead of matching the plan string
 - ``pushed``         scans with non-empty PushedFilters
 - ``single_part_win`` windows forced to one partition (global orderBy
                      without partitionBy that did NOT collapse into a
@@ -130,6 +138,30 @@ def audit_plan(plan: str) -> dict:
     }
 
 
+def python_rdd_scans(jplan) -> int:
+    """Count the ``Scan ExistingRDD`` leaves of a JVM physical plan
+    (AQE wrappers, query stages and subqueries included) whose RDD
+    lineage holds a ``PythonRDD``. Reading an RDD's debug string plans
+    nothing and runs no job."""
+    n, stack = 0, [jplan]
+    while stack:
+        p = stack.pop()
+        cls = p.getClass().getSimpleName()
+        if cls == "AdaptiveSparkPlanExec":
+            stack.append(p.executedPlan())
+            continue
+        if cls.endswith("QueryStageExec"):
+            stack.append(p.plan())
+            continue
+        if p.nodeName() == "Scan ExistingRDD" and (
+            "PythonRDD" in p.rdd().toDebugString()
+        ):
+            n += 1
+        for seq in (p.children(), p.subqueries()):
+            stack.extend(seq.apply(i) for i in range(seq.size()))
+    return n
+
+
 def audit_query(spark, name: str, sf_dir: str, execute: bool = False) -> dict:
     """``execute=True`` collect()s the frame first so AQE finalizes —
     the counters then describe the plan that actually ran (and codegen
@@ -138,12 +170,17 @@ def audit_query(spark, name: str, sf_dir: str, execute: bool = False) -> dict:
     own QueryExecution at isFinalPlan=false. Audit runs at sf0.001, so
     the driver-side result is tiny. ``execute=False`` audits the
     pre-execution plan: free, and sufficient for the red-flag counters
-    (py_row / nested_loop / pushed), which the pytest gate uses."""
+    (py_row / py_rdd / nested_loop / pushed), which the pytest gate
+    uses."""
     df = registry.QUERIES[name](spark, sf_dir)
     if execute:
         df.collect()
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    return {"query": name, **audit_plan(plan)}
+    jplan = df._jdf.queryExecution().executedPlan()
+    return {
+        "query": name,
+        **audit_plan(jplan.toString()),
+        "py_rdd": python_rdd_scans(jplan),
+    }
 
 
 def main() -> None:
