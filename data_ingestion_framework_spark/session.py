@@ -81,12 +81,21 @@ def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
     no action on the frame starts a Python worker and its plan carries
     no lineage (``createDataFrame(<list>)`` builds a Python-pickled RDD
     instead, ``Scan ExistingRDD``, whose every action runs Python-worker
-    tasks). Values are identical to ``createDataFrame(rows, schema)``:
-    ``schema`` is a ``StructType`` or a DDL string; rows are tuples or
-    ``Row`` objects (positional, as ``createDataFrame`` reads them) or
-    dicts (by name); naive ``TIMESTAMP`` values are read in the local
-    time zone, as ``createDataFrame`` reads them. An empty ``rows``
-    gives an empty frame of ``schema``. Frames above
+    tasks). ``schema`` is a ``StructType`` or a DDL string; rows are
+    tuples, ``Row`` objects or dicts. An empty ``rows`` gives an empty
+    frame of ``schema``.
+
+    Values match ``createDataFrame(rows, schema)`` within two limits:
+
+    * rows that are not dicts are read BY POSITION, ``Row(**kwargs)``
+      included — ``createDataFrame`` reads a kwargs ``Row`` by name when
+      the schema needs no field conversion, so such a row must list its
+      fields in the schema's order; dicts are read by name;
+    * a naive ``datetime`` is read in the local time zone (as
+      ``createDataFrame`` reads it) only in a TOP-LEVEL ``TIMESTAMP``
+      column; one nested in an array, map or struct is taken as UTC.
+
+    Frames above
     ``spark.sql.execution.arrow.localRelationThreshold`` (48 MB by
     default) become an Arrow-batch RDD instead, still without Python
     workers."""

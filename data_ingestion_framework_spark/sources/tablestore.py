@@ -213,7 +213,7 @@ class ParquetTable:
         would fail with PARQUET_COLUMN_DATA_TYPE_MISMATCH."""
         ws = self.properties().get("widened_schema")
         if ws and not self.partition_by:
-                r = r.schema(T.StructType.fromJson(ws))
+            r = r.schema(T.StructType.fromJson(ws))
         return r
 
     # -- partition evolution ---------------------------------------------------
@@ -379,14 +379,23 @@ class ParquetTable:
             r = r.option("basePath", self.path)
         return r.parquet(*[os.path.join(self.path, f) for f in rels])
 
-    def _logged_schema(self) -> T.StructType | None:
+    def _logged_schema(self, files: list[str] | None = None) -> T.StructType | None:
         """The table's row schema from the newest commit record (Delta's
         ``metaData`` action), or ``None`` when reads must infer it from
-        footers: the record predates logged schemas, or the table is
+        footers: the record predates logged schemas, the table is
         ``schema_evolved`` (footers differ, reads union them) or has a
-        ``widened_schema`` (which pins the read schema itself)."""
+        ``widened_schema`` (which pins the read schema itself), or its
+        live files (``files``, default :meth:`_live_files`) span
+        partition-spec eras: the logged schema is then the newest era's
+        footer, and declaring it on a scan of an older era's files —
+        even a scan pruned to those files alone — would drop a column
+        that era stores in-body."""
         props = self.properties()
         if props.get("schema_evolved") or props.get("widened_schema"):
+            return None
+        if files is None:
+            files = self._live_files()
+        if len({self._file_spec(f) for f in files}) > 1:
             return None
         logged = (self._latest_record() or {}).get("schema")
         return T.StructType.fromJson(json.loads(logged)) if logged else None
@@ -435,12 +444,12 @@ class ParquetTable:
         record has no schema (an older log), the table is
         ``schema_evolved`` or has a ``widened_schema``, and for
         mixed-era (partition-evolved) file sets."""
-        logged = self._logged_schema()
         strict = self.properties().get("strict_files")
         if strict:
             files = (self._latest_record() or {}).get("files") or []
         else:
             files = self._data_files()
+        logged = self._logged_schema(files)
         if not files and logged is not None:
             if set(self._identity_partition_cols()) <= set(logged.names):
                 return self._from_physical(local_frame(self.spark, [], logged))
@@ -2213,7 +2222,8 @@ class ParquetTable:
         file-scoped statement derives touched files and replacement
         rows from. Metadata columns must be materialized at the scan
         (they don't resolve through joins)."""
-        specs = self._live_specs()
+        live = self._live_files()
+        specs = {self._file_spec(f) for f in live}
         if len(specs) > 1:
             # a COW rewrite would re-lay touched rows under the CURRENT
             # spec while leaving their untouched file-mates in the old
@@ -2223,7 +2233,7 @@ class ParquetTable:
                 "partition-spec eras — run rewrite_to_current_spec() "
                 "(or overwrite()) first"
             )
-        r = self._reader(self._logged_schema(), next(iter(specs), ()))
+        r = self._reader(self._logged_schema(live), next(iter(specs), ()))
         if self.properties().get("strict_files"):
             # same log-as-source-of-truth contract as read(): a COW
             # statement must not sweep a crashed writer's stray rows
@@ -3344,23 +3354,37 @@ class ParquetTable:
         stale index rather than silently missing rows)."""
         if m_bits & (m_bits - 1):
             raise ValueError("m_bits must be a power of two")
-        specs = self._live_specs()
-        r = self._reader(
-            self._logged_schema() if len(specs) == 1 else None,
-            next(iter(specs), ()),
+        files = self._live_files()
+        eras = self._era_pairs(
+            self.path, [os.path.join(self.path, f) for f in files]
         )
-        # raw scan (not read()): _metadata only resolves on the scan
-        # frame, before any column-mapping or DV projection. DV'd rows'
-        # values may set extra bits — false positives only, which Bloom
+        if len(eras) <= 1:
+            # one layout: a directory scan partition-infers it
+            spec = eras[0][0] if eras else ()
+            eras = [(spec, [self.path])]
+        logged = self._logged_schema(files)
+        # raw scans (not read()): _metadata only resolves on the scan
+        # frame, before any column-mapping or DV projection — so a
+        # partition-evolved table gets one scan per era (a directory
+        # scan cannot partition-infer mixed layouts). DV'd rows' values
+        # may set extra bits — false positives only, which Bloom
         # lookups tolerate by contract.
-        base = self._from_physical(
-            r.parquet(self.path).select(
-                F.col("_metadata.file_path").alias("__file"), "*"
+        frames = []
+        for spec, paths in eras:
+            r = self._reader(logged, spec)
+            if spec and paths != [self.path]:
+                r = r.option("basePath", self.path)
+            base = self._from_physical(
+                r.parquet(*paths).select(
+                    F.col("_metadata.file_path").alias("__file"), "*"
+                )
             )
-        )
-        df = base.select(
-            "__file", F.col(col).cast("string").alias("__v")
-        )
+            frames.append(
+                base.select("__file", F.col(col).cast("string").alias("__v"))
+            )
+        df = frames[0]
+        for f in frames[1:]:
+            df = df.unionByName(f)
         pos = F.array(
             *[
                 F.xxhash64(F.lit(i), F.col("__v")).bitwiseAND(F.lit(m_bits - 1))

@@ -23,6 +23,7 @@ from pyspark.sql.streaming import StreamingQueryListener
 
 from data_ingestion_framework_spark.session import local_frame
 
+
 def _path_token_in(description: str, path: str) -> bool:
     """True when ``path`` appears in ``description`` as a COMPLETE path
     token — i.e. not extendable to a longer path on EITHER side. Plain

@@ -96,6 +96,35 @@ def test_range_scan_prunes_across_eras(spark, evolved):
     assert got == want and got
 
 
+def _as_dicts(df):
+    return sorted((r.asDict() for r in df.collect()), key=lambda d: d["k"])
+
+
+def test_scans_pruned_to_old_era_keep_its_columns(spark, evolved):
+    # the newest record's logged schema is the [pri]-era footer
+    # (k, status, v); a scan that prunes to [status]-era files alone
+    # must still return the pri column those files store in-body
+    want = _as_dicts(evolved.read().where(F.col("k").between(0, 5)))
+    assert len(want) == 6 and all(d["pri"] is not None for d in want)
+    got = evolved.range_scan("k", 0, 5)
+    assert set(got.columns) == set(evolved.read().columns)
+    assert _as_dicts(got) == want
+    evolved.build_bloom_index("k")
+    files = evolved.lookup_files("k", 3)
+    assert files and all("/status=" in p for p in files)
+    got = evolved.point_lookup("k", 3)
+    assert set(got.columns) == set(evolved.read().columns)
+    assert _as_dicts(got) == [d for d in want if d["k"] == 3]
+
+
+def test_bloom_index_spans_eras(spark, evolved):
+    evolved.build_bloom_index("k")
+    for k in (4, 27):
+        assert [r["v"] for r in evolved.point_lookup("k", k).collect()] == [
+            float(k)
+        ]
+
+
 def test_unpartitioned_to_partitioned_evolution(spark, tmp_path):
     t = ParquetTable(spark, str(tmp_path / "u"))
     t.overwrite(spark.createDataFrame(_rows(0, 10)))

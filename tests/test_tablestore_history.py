@@ -2278,7 +2278,7 @@ def test_logged_schema_read_matches_inferred(
     with launched_jobs() as logged_jobs:
         logged = read(t)
     with monkeypatch.context() as m:
-        m.setattr(ParquetTable, "_logged_schema", lambda self: None)
+        m.setattr(ParquetTable, "_logged_schema", lambda self, files=None: None)
         with launched_jobs() as inferred_jobs:
             inferred = read(t)
     assert inferred_jobs, "the inferred path should open a footer"
@@ -2379,7 +2379,7 @@ def test_uncommitted_files_after_create_read_like_inference(spark, tpath, monkey
     ).partitionBy("p").parquet(tpath)
     logged = t.read()
     with monkeypatch.context() as m:
-        m.setattr(ParquetTable, "_logged_schema", lambda self: None)
+        m.setattr(ParquetTable, "_logged_schema", lambda self, files=None: None)
         inferred = t.read()
     assert logged.schema.simpleString() == "struct<k:bigint,v:string,p:int>"
     assert logged.schema == inferred.schema
