@@ -11,21 +11,29 @@ commit the same plans through Delta/Iceberg ``MERGE``; in this
 environment (no delta-spark on the classpath) the store provides the
 same contract natively:
 
-- **Atomic-ish commits**: new state is written to a staging directory
-  and swapped in with directory renames; on a failed swap the previous
-  state is restored, so a failed job never leaves a half-written table.
+- **Atomic-ish commits**: every rewrite (``overwrite``,
+  ``overwrite_partitions``, the file-scoped copy-on-write of
+  delete/update/compaction, ``create_empty``) goes through one staged
+  commit: the new state is written to a staging directory, the entries
+  it replaces retire to ``_history``, and the staged entries move in,
+  one rename each. If a rename fails, the entries already moved in are
+  removed and the retired ones move back before any commit record is
+  written, so a failed job never leaves a half-written table. (A
+  process killed mid-swap is not rolled back.)
 - **Commit log** (``DESCRIBE HISTORY`` parity): every commit appends a
   JSON record under ``{path}/_commits/`` — seq, timestamp, operation,
   caller metrics (e.g. merge_stats rows in/out), rows written, and the
   list of data files constituting the table after the commit. Spark
   ignores underscore-prefixed directories, so the log is invisible to
   ``spark.read.parquet(path)``.
-- **Time travel** (``VERSION AS OF`` parity): ``overwrite`` retains the
-  replaced state under ``{path}/_history/pre{seq}/`` (the Delta model:
-  old files are removed from the snapshot, not deleted) and
-  ``overwrite_partitions`` retains only the replaced partition
-  directories; ``as_of(seq)`` re-reads the exact file snapshot of any
-  logged commit until ``vacuum()``.
+- **Time travel** (``VERSION AS OF`` parity): the staged commit at
+  ``seq`` retains what it replaced under ``{path}/_history/pre{seq}/``
+  (the Delta model: old files are removed from the snapshot, not
+  deleted) — every snapshot entry for ``overwrite``, the replaced
+  partition directories for ``overwrite_partitions``, the replaced
+  files (and their deletion-vector rows) for the file-scoped rewrites;
+  ``as_of(seq)`` re-reads the exact file snapshot of any logged commit
+  until ``vacuum()``.
 
 Scale note: the *data* written per commit is proportional to the commit
 (append = batch, overwrite_partitions = touched partitions only); the
@@ -43,6 +51,7 @@ log-as-source-of-truth scans.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import re
@@ -64,11 +73,11 @@ DV_PTR = "_dv_ptr"
 _SPARK_ROW_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 #: deletion-vector sidecar rows (see ``delete_where_dv``)
 _DV_SCHEMA = "file_name string, row_index bigint, dv_seq bigint"
-#: table-lifecycle sidecars the overwrite swap carries into the NEW
-#: root (everything else in the old root is snapshot state and retires
-#: to _history): the commit log, retained history, properties, and the
-#: exported Delta log (sinks/delta_export.py — it describes the table
-#: across commits, not one snapshot)
+#: table-lifecycle entries an ``overwrite`` never moves (every other
+#: root entry is snapshot state and retires to _history): the commit
+#: log, retained history, properties, and the exported Delta log
+#: (sinks/delta_export.py — it describes the table across commits, not
+#: one snapshot)
 _AUX = (LOG_DIR, HIST_DIR, PROPS_FILE, "_delta_log")
 
 
@@ -98,6 +107,11 @@ def _keep_column_order(table_schema: str, file_schema: str) -> str:
 
 def _is_hidden(rel: str) -> bool:
     return any(seg.startswith(("_", ".")) for seg in rel.split(os.sep))
+
+
+def _move(src: str, dst: str) -> None:
+    os.makedirs(os.path.dirname(dst), exist_ok=True)
+    os.rename(src, dst)
 
 
 def _fmt_partition_value(v) -> str:
@@ -474,8 +488,7 @@ class ParquetTable:
                 df = r.parquet(*[os.path.join(self.path, f) for f in files])
             else:
                 df = r.parquet(self.path)
-        if os.path.isdir(self._dv_dir()):
-            df = self._subtract_dv(df, [self._dv_dir()])
+        df = self._without_dv(df, [self._dv_dir()])
         return self._from_physical(df)
 
     # -- column mapping (metadata-only RENAME/DROP COLUMN) -------------------
@@ -946,29 +959,44 @@ class ParquetTable:
         schema (no footer-inference job)."""
         return self.spark.read.schema(_DV_SCHEMA).parquet(d)
 
-    def _subtract_dv(
-        self, df: DataFrame, dv_dirs: list[str], max_seq: int | None = None
+    def _without_dv(
+        self,
+        df: DataFrame,
+        dv_dirs: list[str],
+        max_seq: int | None = None,
+        keep_positions: bool = False,
     ) -> DataFrame:
-        """Anti-join the deletion-vector sidecars out of a scan frame.
-        Vectors key on ``(_metadata.file_name, _metadata.row_index)`` —
-        part-file names carry task UUIDs, so the name alone identifies
-        the file without path normalization across live/history roots.
-        ``max_seq`` caps which deletes apply (time travel)."""
-        dv = None
-        for d in dv_dirs:
-            f = self._read_dv(d)
-            dv = f if dv is None else dv.unionByName(f)
-        if max_seq is not None:
-            dv = dv.where(F.col("dv_seq") <= max_seq)
-        marked = df.select(
-            "*",
-            F.col("_metadata.file_name").alias("__dv_f"),
-            F.col("_metadata.row_index").alias("__dv_p"),
-        )
-        cond = (F.col("__dv_f") == dv["file_name"]) & (
-            F.col("__dv_p") == dv["row_index"]
-        )
-        return marked.join(dv, cond, "left_anti").drop("__dv_f", "__dv_p")
+        """Anti-join the deletion-vector sidecars in ``dv_dirs`` (those
+        that exist) out of a scan frame. Vectors key on
+        ``(_metadata.file_name, _metadata.row_index)`` — part-file names
+        carry task UUIDs, so the name alone identifies the file without
+        path normalization across live/history roots. The frame is
+        marked with them as ``__f``/``__p`` unless it carries those
+        already: metadata columns resolve only on a plain scan, so a
+        union of scans is marked scan by scan first. ``max_seq`` caps
+        which deletes apply (time travel); ``keep_positions`` keeps
+        ``__f``/``__p`` for the file-scoped statements. A frame with no
+        sidecar to subtract and no positions to keep is returned as is."""
+        dv_dirs = [d for d in dv_dirs if os.path.isdir(d)]
+        if not dv_dirs and not keep_positions:
+            return df
+        if "__f" not in df.columns:
+            df = df.select(
+                "*",
+                F.col("_metadata.file_name").alias("__f"),
+                F.col("_metadata.row_index").alias("__p"),
+            )
+        if dv_dirs:
+            dv = functools.reduce(
+                DataFrame.unionByName, map(self._read_dv, dv_dirs)
+            )
+            if max_seq is not None:
+                dv = dv.where(F.col("dv_seq") <= max_seq)
+            cond = (F.col("__f") == dv["file_name"]) & (
+                F.col("__p") == dv["row_index"]
+            )
+            df = df.join(dv, cond, "left_anti")
+        return df if keep_positions else df.drop("__f", "__p")
 
     def delete_where_dv(self, predicate) -> int:
         """Deletion-vector DELETE — Delta deletion vectors parity: the
@@ -995,22 +1023,16 @@ class ParquetTable:
                 "delete_where (rewrite) instead"
             )
         pred = F.expr(predicate) if isinstance(predicate, str) else predicate
-        base = self._reader(self._logged_schema()).parquet(self.path).select(
-            "*",
-            F.col("_metadata.file_name").alias("__dv_f"),
-            F.col("_metadata.row_index").alias("__dv_p"),
-        )
         dvd = self._dv_dir()
-        if os.path.isdir(dvd):
-            dv = self._read_dv(dvd)
-            cond = (F.col("__dv_f") == dv["file_name"]) & (
-                F.col("__dv_p") == dv["row_index"]
-            )
-            base = base.join(dv, cond, "left_anti")
+        base = self._without_dv(
+            self._reader(self._logged_schema()).parquet(self.path),
+            [dvd],
+            keep_positions=True,
+        )
         base = self._from_physical(base)  # predicate sees logical names
         doomed = base.where(F.coalesce(pred, F.lit(False))).select(
-            F.col("__dv_f").alias("file_name"),
-            F.col("__dv_p").alias("row_index"),
+            F.col("__f").alias("file_name"),
+            F.col("__p").alias("row_index"),
         )
         if doomed.limit(1).count() == 0:
             return 0
@@ -1553,25 +1575,12 @@ class ParquetTable:
                     r = r.option("basePath", root)
                 f = r.parquet(*group)
                 if dv_dirs:
-                    # metadata keys must be materialized per-scan (they
-                    # don't resolve through a union)
-                    f = f.select(
-                        "*",
-                        F.col("_metadata.file_name").alias("__dv_f"),
-                        F.col("_metadata.row_index").alias("__dv_p"),
-                    )
+                    # positions resolve per scan, not through the union
+                    f = self._without_dv(f, [], keep_positions=True)
                 era_pairs.append((spec, f))
-        df = self._union_era_frames(era_pairs)
-        if dv_dirs:
-            dv = None
-            for d in dv_dirs:
-                f = self._read_dv(d)
-                dv = f if dv is None else dv.unionByName(f)
-            dv = dv.where(F.col("dv_seq") <= seq)
-            cond = (F.col("__dv_f") == dv["file_name"]) & (
-                F.col("__dv_p") == dv["row_index"]
-            )
-            df = df.join(dv, cond, "left_anti").drop("__dv_f", "__dv_p")
+        df = self._without_dv(
+            self._union_era_frames(era_pairs), dv_dirs, max_seq=seq
+        )
         # current column mapping applies to every root — physical names
         # are immortal, so pre-rename snapshots read correctly under
         # the live logical names (Delta's metadata-mapping behavior)
@@ -1919,7 +1928,8 @@ class ParquetTable:
 
     # -- writes --------------------------------------------------------------
     def _writer(self, df: DataFrame, mode: str, cluster: bool = False):
-        """Writer for the create / append / partition-scoped commits.
+        """Writer of every data write: ``append`` writes into the live
+        root, :meth:`_staged_commit` into its staging directory.
 
         ``cluster=True`` (``overwrite_partitions`` only) clusters a
         partitioned write's rows by the physical partition columns
@@ -1931,10 +1941,9 @@ class ParquetTable:
         columns: still one file per partition, none split. Partitioned
         ``append`` is not clustered: the extra shuffle of the written
         data is measured only on small bucket rewrites, where opening
-        files dominates, not on appends. ``overwrite()`` keeps its
-        own writer and the caller's layout: ``compact`` relies on
-        ``coalesce(n)`` and ``compact(zorder_by=...)`` on its range
-        sort."""
+        files dominates, not on appends. ``overwrite()`` keeps the
+        caller's layout: ``compact`` relies on ``coalesce(n)`` and
+        ``compact(zorder_by=...)`` on its range sort."""
         df = self._to_physical(self._with_hidden_partitions(df))
         if not self.partition_by:
             return df.write.mode(mode)
@@ -1943,20 +1952,87 @@ class ParquetTable:
             df = df.hint("rebalance", *cols)
         return df.write.mode(mode).partitionBy(*cols)
 
+    def _staged_commit(
+        self,
+        df: DataFrame,
+        op: str,
+        metrics: dict | None,
+        replaced,
+        cluster: bool = False,
+        schema: str | None = None,
+    ) -> dict:
+        """The one commit path of every rewrite — ``overwrite``,
+        ``overwrite_partitions``, ``_replace_files`` and
+        ``create_empty``. Returns the commit record.
+
+        ``df`` is written through :meth:`_writer` into a sibling
+        ``__staging__`` directory first, so a frame derived from
+        ``self.read()`` never races its own input. The staged entries
+        are the written partition directories (partitioned tables) or
+        data files with their ``.crc`` checksum sidecars (the write's
+        ``_SUCCESS`` marker stays behind). ``replaced(staged)`` names
+        the live entries (relative paths) the commit replaces; each one
+        that exists moves to ``_history/pre{seq}/<rel>`` (kept for
+        ``as_of`` until ``vacuum()``), then each staged entry moves in,
+        parent directories created as needed. If any move fails, the staged
+        entries already moved in are removed and every retired entry
+        moves back, so the table is left as it was and no commit is
+        recorded. The record counts only the staged files (their
+        relative paths are unchanged by the move): listing the whole
+        table would re-read every live footer."""
+        staging = f"{self.path}.__staging__{uuid.uuid4().hex[:8]}"
+        try:
+            self._writer(df, "overwrite", cluster).parquet(staging)
+            files = self._data_files(staging)
+            if self.partition_by:
+                staged = sorted({os.path.dirname(f) for f in files})
+            else:  # not _SUCCESS and its ._SUCCESS.crc
+                staged = sorted(
+                    e for e in os.listdir(staging)
+                    if not e.startswith(("_", "._"))
+                )
+            pre = os.path.join(self._hist_dir(), f"pre{self._next_seq():08d}")
+            retired, moved_in = [], []
+            try:
+                for rel in sorted(replaced(staged)):
+                    if os.path.lexists(os.path.join(self.path, rel)):
+                        _move(os.path.join(self.path, rel), os.path.join(pre, rel))
+                        retired.append(rel)
+                for rel in staged:
+                    _move(os.path.join(staging, rel), os.path.join(self.path, rel))
+                    moved_in.append(rel)
+            except BaseException:
+                for rel in moved_in:
+                    live = os.path.join(self.path, rel)
+                    if os.path.isdir(live):
+                        shutil.rmtree(live)
+                    else:
+                        os.unlink(live)
+                for rel in retired:
+                    _move(os.path.join(pre, rel), os.path.join(self.path, rel))
+                shutil.rmtree(pre, ignore_errors=True)
+                raise
+            return self._record_commit(op, metrics, new_files=files, schema=schema)
+        finally:
+            shutil.rmtree(staging, ignore_errors=True)
+
     def create_empty(self, schema, metrics: dict | None = None) -> None:
         """writers/writer.py:142-155 ``_create_table_by_scd_type``.
 
-        The ``create`` record logs the declared ``schema`` (a
-        ``StructType`` or DDL string). A partitioned table writes no
-        data file (an empty frame makes no partition directory), so the
-        logged schema is what :meth:`read` returns for it until the
-        first write; ``exists()`` stays false until then."""
-        if not self.exists():
-            df = local_frame(self.spark, [], schema)
-            self._writer(df, "overwrite").parquet(self.path)
-            self._record_commit(
-                "create", metrics, new_files=[], schema=df.schema.json()
-            )
+        A no-op once the table has a commit record or data files;
+        otherwise a staged commit that replaces nothing, so properties
+        set beforehand stay. The ``create`` record logs the declared
+        ``schema`` (a ``StructType`` or DDL string). A partitioned table
+        writes no data file (an empty frame makes no partition
+        directory), so the logged schema is what :meth:`read` returns
+        for it until the first write; ``exists()`` stays false until
+        then."""
+        if self._record_names() or self._data_files():
+            return
+        df = local_frame(self.spark, [], schema)
+        self._staged_commit(
+            df, "create", metrics, lambda staged: [], schema=df.schema.json()
+        )
 
     def append(
         self,
@@ -2053,12 +2129,16 @@ class ParquetTable:
         op: str = "overwrite",
         identity_order_by: list[str] | None = None,
     ) -> None:
-        """Safe even when ``df`` was derived from ``self.read()``: the
-        new state is materialized into a staging directory first, then
-        swapped in with directory renames. On a failed swap the previous
-        state is renamed back, so the table is never lost; on success
-        the previous state is retained under ``_history/pre{seq}`` for
-        time travel (removed by ``vacuum()``)."""
+        """Replace the whole table state with ``df`` — a staged commit
+        (:meth:`_staged_commit`) that replaces every root entry outside
+        ``_AUX``: the commit log, properties, retained history and an
+        exported Delta log never move. Safe even when ``df`` was derived
+        from ``self.read()``; a failed swap leaves the previous state,
+        and on success that state is retained under
+        ``_history/pre{seq}`` for time travel (removed by
+        ``vacuum()``). The rewrite's files hold one schema again, so
+        the ``schema_evolved``, ``widened_schema`` and ``added_columns``
+        properties are cleared once it lands."""
         if op == "overwrite":
             # only USER batches get identity allocation / the ALWAYS
             # guard — internal rewrites (delete/update/restore/...)
@@ -2069,51 +2149,21 @@ class ParquetTable:
             # passed the constraints — re-probing there would add an
             # O(table) scan to every maintenance pass
             self._enforce_constraints(df)
-        staging = f"{self.path}.__staging__{uuid.uuid4().hex[:8]}"
-        backup = f"{self.path}.__old__{uuid.uuid4().hex[:8]}"
-        w = self._to_physical(self._with_hidden_partitions(df)).write.mode(
-            "overwrite"
-        )
-        if self.partition_by:
-            w = w.partitionBy(*self._physical_partition_cols())
-        try:
-            w.parquet(staging)
-            seq = self._next_seq()
-            had_prior = os.path.isdir(self.path)
-            if had_prior:
-                os.rename(self.path, backup)
-            try:
-                os.rename(staging, self.path)
-            except BaseException:
-                if had_prior:
-                    os.rename(backup, self.path)  # restore — never lose the table
-                raise
-            if had_prior:
-                # carry the commit log and retained history into the new
-                # state, then retain the replaced data files for as_of.
-                for aux in _AUX:
-                    src = os.path.join(backup, aux)
-                    if os.path.exists(src):
-                        os.rename(src, os.path.join(self.path, aux))
-                os.makedirs(self._hist_dir(), exist_ok=True)
-                os.rename(backup, os.path.join(self._hist_dir(), f"pre{seq:08d}"))
-        finally:
-            shutil.rmtree(staging, ignore_errors=True)
-        if self.properties().get("widened_schema") is not None:
-            # the rewrite's files define the schema again — a stale
-            # pinned schema would mask (or mis-type) replaced columns
-            self.set_properties({"widened_schema": None})
-        if self.properties().get("added_columns"):
-            # the rewrite materialized (or dropped) the metadata-added
-            # columns — the files are the schema again, and a stale
-            # entry would re-stamp defaults over explicit NULL appends
-            self.set_properties({"added_columns": None})
-        # After the swap the live tree holds exactly this commit's staged
-        # files — pass them so _record_commit reads only their footers
-        # (new_files=None would re-read EVERY live footer, O(table) driver
-        # work per overwrite, and would record full-table row counts where
-        # append commits record per-commit counts).
-        rec = self._record_commit(op, metrics, new_files=self._data_files())
+
+        def snapshot(staged: list[str]) -> list[str]:
+            if not os.path.isdir(self.path):
+                return []
+            return [e for e in os.listdir(self.path) if e not in _AUX]
+
+        rec = self._staged_commit(df, op, metrics, snapshot)
+        props = self.properties()
+        stale = ("schema_evolved", "widened_schema", "added_columns")
+        if any(props.get(k) for k in stale):
+            # a stale schema_evolved would keep every read on the
+            # footer-union job, a stale widened_schema would mask (or
+            # mis-type) replaced columns, and stale added_columns would
+            # re-stamp defaults over explicit NULL appends
+            self.set_properties(dict.fromkeys(stale))
         self._advance_identity_hwm(rec)
 
     def _replace_files(
@@ -2128,42 +2178,19 @@ class ParquetTable:
         frame's output files; every other file stays in place
         byte-identical — Delta's touched-files rewrite for UPDATE/
         DELETE, which keeps a 0.1%-selective statement O(touched
-        files) instead of O(table). Same staging discipline as
-        ``overwrite`` (the replacement materializes fully before any
-        live file moves; failures move the retained files back);
-        replaced files land under ``_history/pre{seq}`` so ``as_of``
-        still resolves them. Staged part files carry fresh task UUIDs,
-        so live-name collisions cannot happen."""
-        staging = f"{self.path}.__staging__{uuid.uuid4().hex[:8]}"
-        try:
-            self._to_physical(replacement).write.mode("overwrite").parquet(
-                staging
-            )
-            staged = self._data_files(staging)
-            seq = self._next_seq()
-            retained = os.path.join(self._hist_dir(), f"pre{seq:08d}")
-            moved = []
-            try:
-                for rel in touched:
-                    dst = os.path.join(retained, rel)
-                    os.makedirs(os.path.dirname(dst), exist_ok=True)
-                    os.rename(os.path.join(self.path, rel), dst)
-                    moved.append(rel)
-                for rel in staged:
-                    os.rename(
-                        os.path.join(staging, rel),
-                        os.path.join(self.path, rel),
-                    )
-            except BaseException:
-                for rel in moved:  # put the live files back — never lose data
-                    os.rename(
-                        os.path.join(retained, rel),
-                        os.path.join(self.path, rel),
-                    )
-                raise
-            return self._record_commit(op, metrics, new_files=staged)
-        finally:
-            shutil.rmtree(staging, ignore_errors=True)
+        files) instead of O(table). A staged commit
+        (:meth:`_staged_commit`) that replaces the ``touched`` files
+        and their checksum sidecars (they land under
+        ``_history/pre{seq}`` so ``as_of`` still resolves them); their
+        deletion-vector rows then retire into the same snapshot
+        (:meth:`_retire_dv_for_files`). Staged part files carry fresh
+        task UUIDs, so live-name collisions cannot happen."""
+        sidecars = [f".{rel}.crc" for rel in touched]
+        rec = self._staged_commit(
+            replacement, op, metrics, lambda staged: touched + sidecars
+        )
+        self._retire_dv_for_files(touched, rec["seq"])
+        return rec
 
     def _retire_dv_for_files(self, touched: list[str], seq: int) -> None:
         """Retire deletion-vector rows referencing the files the commit
@@ -2171,8 +2198,8 @@ class ParquetTable:
         into that commit's history snapshot (``_history/pre{seq}/_dv``)
         so ``as_of`` any earlier commit still applies them to the
         retained data files — the travels-with-its-snapshot contract
-        ``delete_where_dv`` documents, which the full-overwrite path
-        honors by leaving ``_dv`` inside the backup tree. The live
+        ``delete_where_dv`` documents, which ``overwrite`` honors by
+        retiring ``_dv`` with every other snapshot entry. The live
         sidecar is then rewritten without them, so footer-arithmetic
         live-row counts stay exact.
 
@@ -2244,18 +2271,7 @@ class ParquetTable:
             src = r.parquet(*[os.path.join(self.path, f) for f in files])
         else:
             src = r.parquet(self.path)
-        base = src.select(
-            "*",
-            F.col("_metadata.file_name").alias("__f"),
-            F.col("_metadata.row_index").alias("__p"),
-        )
-        dvd = self._dv_dir()
-        if os.path.isdir(dvd):
-            dv = self._read_dv(dvd)
-            cond = (F.col("__f") == dv["file_name"]) & (
-                F.col("__p") == dv["row_index"]
-            )
-            base = base.join(dv, cond, "left_anti")
+        base = self._without_dv(src, [self._dv_dir()], keep_positions=True)
         return self._from_physical(base)  # __f/__p pass through
 
     def _live_rows_in_files(self, touched: list[str]) -> int:
@@ -2342,7 +2358,6 @@ class ParquetTable:
                 .drop("__f", "__p")
             )
             rec = self._replace_files(touched, replacement, "delete", metrics)
-            self._retire_dv_for_files(touched, rec["seq"])
         else:
             before = self._live_rows_in_files(all_files)
             self.overwrite(
@@ -2450,8 +2465,7 @@ class ParquetTable:
             # are enforced on the replacement — the only new rows
             replacement = _apply(cur.where(F.col("__f").isin(touched)))
             self._enforce_constraints(replacement)
-            rec = self._replace_files(touched, replacement, "update", metrics)
-            self._retire_dv_for_files(touched, rec["seq"])
+            self._replace_files(touched, replacement, "update", metrics)
         else:
             self.overwrite(
                 _apply(cur), op="update", metrics=metrics
@@ -2603,12 +2617,13 @@ class ParquetTable:
         files only, writers/writer.py:177-281; this rewrites touched
         *partitions* only).
 
-        Safe even when ``df`` was derived from ``self.read()``: the new
-        partition data is fully materialized into a staging directory
-        *before* any live partition is moved, so the lazy write job never
-        races its own input (same staging discipline as ``overwrite``).
-        Replaced partition dirs are retained under ``_history/pre{seq}``
-        so ``as_of`` still works.
+        A staged commit (:meth:`_staged_commit`) that replaces the
+        touched partition directories — the staged ones plus
+        ``extra_touched`` — recorded as the ``touched_partitions``
+        metric. Safe even when ``df`` was derived from ``self.read()``;
+        a failed swap leaves every partition as it was, and replaced
+        partition dirs are retained under ``_history/pre{seq}`` so
+        ``as_of`` still works.
 
         The staged write clusters rows by the partition columns first
         (``_writer(cluster=True)``): a touched partition below the
@@ -2643,48 +2658,16 @@ class ParquetTable:
                 "compact() first to materialize them"
             )
         self._enforce_constraints(df)
-        staging = f"{self.path}.__staging__{uuid.uuid4().hex[:8]}"
-        try:
-            self._writer(df, "overwrite", cluster=True).parquet(staging)
-            staged_files = self._data_files(staging)
-            staged = sorted({os.path.dirname(rel) for rel in staged_files})
-            touched = sorted(set(staged) | set(extra_touched or []))
-            seq = self._next_seq()
-            retained = os.path.join(self._hist_dir(), f"pre{seq:08d}")
-            moved = []
-            for rel in touched:
-                src = os.path.join(self.path, rel)
-                if os.path.isdir(src):
-                    dst = os.path.join(retained, rel)
-                    os.makedirs(os.path.dirname(dst), exist_ok=True)
-                    os.rename(src, dst)
-                    moved.append(rel)
-            try:
-                for rel in staged:
-                    src = os.path.join(staging, rel)
-                    dst = os.path.join(self.path, rel)
-                    os.makedirs(os.path.dirname(dst), exist_ok=True)
-                    os.rename(src, dst)
-            except BaseException:
-                # put the retained partitions back — never lose data
-                for rel in moved:
-                    dst = os.path.join(retained, rel)
-                    target = os.path.join(self.path, rel)
-                    shutil.rmtree(target, ignore_errors=True)
-                    os.makedirs(os.path.dirname(target), exist_ok=True)
-                    os.rename(dst, target)
-                shutil.rmtree(retained, ignore_errors=True)
-                raise
-        finally:
-            shutil.rmtree(staging, ignore_errors=True)
-        # Count only this commit's staged files (their relative paths are
-        # unchanged by the move) — new_files=None would footer-read every
-        # live file including UNTOUCHED partitions: O(table) driver work
-        # and a full-table rows_written where appends record per-commit.
-        self._record_commit(
-            "overwrite_partitions",
-            dict(metrics or {}, touched_partitions=touched),
-            new_files=staged_files,
+        metrics = dict(metrics or {})
+
+        def touched(staged: list[str]) -> list[str]:
+            metrics["touched_partitions"] = sorted(
+                set(staged) | set(extra_touched or [])
+            )
+            return metrics["touched_partitions"]
+
+        self._staged_commit(
+            df, "overwrite_partitions", metrics, touched, cluster=True
         )
 
     def replace_where(self, df: DataFrame, predicate) -> None:
@@ -2878,21 +2861,8 @@ class ParquetTable:
         physical; mixing namespaces would mis-map chained renames)."""
         spec = tuple({c for f in rels for c in self._file_spec(f)})
         r = self._reader(self._logged_schema(), spec)
-        df = r.parquet(*[os.path.join(self.path, f) for f in rels]).select(
-            "*",
-            F.col("_metadata.file_name").alias("__f"),
-            F.col("_metadata.row_index").alias("__p"),
-        )
-        dvd = self._dv_dir()
-        if os.path.isdir(dvd):
-            dv = self._read_dv(dvd).where(
-                F.col("file_name").isin(rels)
-            )
-            cond = (F.col("__f") == dv["file_name"]) & (
-                F.col("__p") == dv["row_index"]
-            )
-            df = df.join(dv, cond, "left_anti")
-        return self._from_physical(df).drop("__f", "__p")
+        df = r.parquet(*[os.path.join(self.path, f) for f in rels])
+        return self._from_physical(self._without_dv(df, [self._dv_dir()]))
 
     def optimize_incremental(
         self,
@@ -2945,13 +2915,12 @@ class ParquetTable:
             max(target_files, 1),
             curve=curve,
         )
-        rec = self._replace_files(
+        self._replace_files(
             new,
             replacement,
             "compact_incremental",
             {"files_clustered": len(new), "zorder_by": list(zorder_by)},
         )
-        self._retire_dv_for_files(new, rec["seq"])
         return len(new)
 
     def compact_small_files(
@@ -2990,13 +2959,12 @@ class ParquetTable:
         replacement = self._read_files_logical(small).coalesce(
             max(target_files, 1)
         )
-        rec = self._replace_files(
+        self._replace_files(
             small,
             replacement,
             "compact_small",
             {"files_compacted": len(small), "min_bytes": min_bytes},
         )
-        self._retire_dv_for_files(small, rec["seq"])
         return len(small)
 
     def file_column_ranges(self, col: str) -> list[tuple]:
@@ -3085,8 +3053,7 @@ class ParquetTable:
         if not keep:
             return self.read().where(F.lit(False))
         df = self._scan_files(keep)
-        if os.path.isdir(self._dv_dir()):
-            df = self._subtract_dv(df, [self._dv_dir()])
+        df = self._without_dv(df, [self._dv_dir()])
         return self._from_physical(df).where(pred)
 
     def count_rows(self) -> int:

@@ -54,3 +54,30 @@ def launched_jobs(spark):
             ids.extend(tracker.getJobIdsForGroup(group))
 
     return probe
+
+
+@pytest.fixture()
+def fail_rename(monkeypatch):
+    """``fail_rename(match, nth=1)`` — from then on, the ``nth`` call of
+    ``os.rename(src, dst)`` for which ``match(src, dst)`` holds raises
+    ``OSError``; every other rename runs, the rollback's included.
+    ``monkeypatch.undo()`` (or the test's end) restores ``os.rename``."""
+    import os
+
+    def arm(match, nth=1):
+        real = os.rename
+        seen = [0]
+
+        def rename(src, dst):
+            if match(src, dst):
+                seen[0] += 1
+                if seen[0] == nth:
+                    raise OSError(
+                        "simulated swap failure (a simulated crash of a "
+                        "file or partition-swap rename)"
+                    )
+            return real(src, dst)
+
+        monkeypatch.setattr(os, "rename", rename)
+
+    return arm

@@ -53,18 +53,12 @@ def test_vacuum_drops_history_keeps_current(spark, tpath):
     assert [r["a"] for r in t.as_of(2).collect()] == [2]
 
 
-def test_failed_swap_restores_table(spark, tpath, monkeypatch):
+def test_failed_swap_restores_table(spark, tpath, monkeypatch, fail_rename):
     t = ParquetTable(spark, tpath)
     t.overwrite(spark.createDataFrame([Row(a=1), Row(a=2)]))
 
-    real_rename = os.rename
-
-    def failing_rename(src, dst):
-        if "__staging__" in src and dst == tpath:
-            raise OSError("simulated swap failure")
-        return real_rename(src, dst)
-
-    monkeypatch.setattr(os, "rename", failing_rename)
+    # fail moving the staged file in, after the live files retired
+    fail_rename(lambda src, dst: "__staging__" in src and dst.startswith(tpath))
     with pytest.raises(OSError, match="simulated swap failure"):
         t.overwrite(spark.createDataFrame([Row(a=99)]))
     monkeypatch.undo()
@@ -462,7 +456,9 @@ def test_describe_detail(spark, tmp_path):
     assert empty.detail()["num_files"] == 0
 
 
-def test_overwrite_partitions_failed_swap_restores(spark, tmp_path, monkeypatch):
+def test_overwrite_partitions_failed_swap_restores(
+    spark, tmp_path, monkeypatch, fail_rename
+):
     """Crash while moving staged partition dirs into place: the
     already-moved retained partitions must come back — no data loss,
     no partial commit record, no staging litter."""
@@ -475,19 +471,11 @@ def test_overwrite_partitions_failed_swap_restores(spark, tmp_path, monkeypatch)
     before = sorted((r["a"], r["p"]) for r in t.read().collect())
     n_commits = len(t.history())
 
-    real_rename = os.rename
-    calls = {"n": 0}
-
-    def failing_rename(src, dst):
-        # fail the SECOND staged-partition move (first succeeded, so
-        # the rollback path must restore it)
-        if "__staging__" in src and "_history" not in dst:
-            calls["n"] += 1
-            if calls["n"] == 2:
-                raise OSError("simulated partition-swap failure")
-        return real_rename(src, dst)
-
-    monkeypatch.setattr(os, "rename", failing_rename)
+    # fail the SECOND staged-partition move (first succeeded, so the
+    # rollback path must restore it)
+    fail_rename(
+        lambda src, dst: "__staging__" in src and "_history" not in dst, nth=2
+    )
     with pytest.raises(OSError, match="partition-swap"):
         t.overwrite_partitions(
             spark.createDataFrame([Row(a=10, p="x"), Row(a=20, p="y")])
@@ -498,6 +486,125 @@ def test_overwrite_partitions_failed_swap_restores(spark, tmp_path, monkeypatch)
     assert len(t.history()) == n_commits  # no commit recorded
     parent = os.path.dirname(str(tmp_path / "t"))
     assert not [d for d in os.listdir(parent) if "__staging__" in d]
+
+
+def test_failed_partition_swap_removes_new_partition(
+    spark, tpath, monkeypatch, fail_rename
+):
+    """A staged partition the table did not have (p=a) moves in first;
+    when the next move fails, the rollback must remove it too, not only
+    restore the replaced p=x."""
+    t = ParquetTable(spark, tpath, partition_by=["p"])
+    t.overwrite(spark.createDataFrame([Row(a=1, p="x"), Row(a=2, p="y")]))
+    before = sorted((r["a"], r["p"]) for r in t.read().collect())
+    fail_rename(lambda src, dst: "__staging__" in src, nth=2)
+    with pytest.raises(OSError, match="partition-swap"):
+        t.overwrite_partitions(
+            spark.createDataFrame([Row(a=10, p="a"), Row(a=20, p="x")])
+        )
+    monkeypatch.undo()
+    assert sorted((r["a"], r["p"]) for r in t.read().collect()) == before
+    assert len(t.history()) == 1
+    assert not [f for f in t._data_files() if f.startswith("p=a")]
+
+
+def test_failed_file_swap_removes_moved_in_files(
+    spark, tpath, monkeypatch, fail_rename
+):
+    """A file-scoped delete whose replacement stages two files: when the
+    second one fails to move in, the first (already live) must leave
+    with the rollback — no extra rows, no extra file, no commit."""
+    t = ParquetTable(spark, tpath)
+    t.overwrite(spark.range(400).repartitionByRange(4, "id"))
+    files = set(t._data_files())
+    assert len(files) == 4
+    fail_rename(
+        lambda src, dst: "__staging__" in src and src.endswith(".parquet"), nth=2
+    )
+    with pytest.raises(OSError, match="simulated crash"):
+        # touches the files holding ids 0-99 and 100-199, 50 rows
+        # survive in each
+        t.delete_where("id < 200 AND id % 100 < 50")
+    monkeypatch.undo()
+    assert set(t._data_files()) == files
+    assert t.read().count() == 400
+    assert [r["op"] for r in t.history()] == ["overwrite"]
+
+
+def test_overwrite_never_moves_the_commit_log(spark, tpath, fail_rename):
+    """``overwrite`` retires only snapshot entries: the commit log,
+    properties and retained history stay where they are, so a rename of
+    any of them failing cannot strand the log away from the new data
+    (the table would show the new rows with no commit history)."""
+    from data_ingestion_framework_spark.sources.tablestore import _AUX
+
+    t = ParquetTable(spark, tpath)
+    t.overwrite(spark.createDataFrame([Row(a=1), Row(a=2)]))
+    t.set_properties({"num_buckets": 4})
+    t.overwrite(spark.createDataFrame([Row(a=3)]))
+    fail_rename(lambda src, dst: os.path.basename(src) in _AUX)
+    t.overwrite(spark.createDataFrame([Row(a=99)]))
+    assert [r["a"] for r in t.read().collect()] == [99]
+    assert [r["seq"] for r in t.history()] == [1, 2, 3]
+    assert sorted(r["a"] for r in t.as_of(1).collect()) == [1, 2]
+    assert t.properties()["num_buckets"] == 4
+
+
+@pytest.mark.parametrize("partition_by", [["p"], None], ids=["partitioned", "unpartitioned"])
+def test_create_empty_keeps_properties_and_log(spark, tpath, partition_by):
+    """``create_empty`` replaces nothing: properties set before it stay,
+    and a second call — on a partitioned table ``exists()`` is still
+    false — does not restart the commit log."""
+    t = ParquetTable(spark, tpath, partition_by=partition_by)
+    t.set_properties({"num_buckets": 4})
+    t.create_empty("k bigint, p int")
+    t.create_empty("k bigint, p int")
+    assert t.properties()["num_buckets"] == 4
+    assert [r["op"] for r in t.history()] == ["create"]
+    assert t.read().columns == ["k", "p"] and t.read().count() == 0
+
+
+def test_full_rewrite_clears_schema_evolved(spark, tmp_path, launched_jobs):
+    """A full rewrite writes one schema, so ``compact`` (through
+    ``overwrite``) clears ``schema_evolved`` and reads plan from the
+    logged schema again, with no footer-union job. Partition- and
+    file-scoped rewrites keep the flag: their untouched files keep
+    their old footers."""
+    from data_ingestion_framework_spark.session import local_frame
+
+    def evolve(t):
+        t.overwrite(
+            local_frame(spark, [(1, "a", 0), (2, "b", 1)], "k bigint, v string, p int")
+            .repartition(2)
+        )
+        t.append(
+            local_frame(spark, [(3, "c", 0, 7)], "k bigint, v string, p int, x int"),
+            merge_schema=True,
+        )
+        assert t.properties()["schema_evolved"]
+
+    t = ParquetTable(spark, str(tmp_path / "full"))
+    evolve(t)
+    want = sorted(tuple(r) for r in t.read().collect())
+    cols = t.read().columns
+    t.compact(target_files=1)
+    with launched_jobs() as ids:
+        df = t.read()
+    assert ids == []
+    assert df.columns == cols
+    assert sorted(tuple(r) for r in df.collect()) == want
+
+    part = ParquetTable(spark, str(tmp_path / "part"), partition_by=["p"])
+    evolve(part)
+    part.overwrite_partitions(part.read().where("p = 1"))
+    assert part.properties()["schema_evolved"]
+
+    files = ParquetTable(spark, str(tmp_path / "files"))
+    evolve(files)
+    assert files.delete_where("k = 1") == 1  # file-scoped: 1 of 3 files
+    assert files.history()[-1]["op"] == "delete"
+    assert len(files._data_files()) == 3
+    assert files.properties()["schema_evolved"]
 
 
 def test_update_where_basic_and_null_predicate(spark, tmp_path):
@@ -730,7 +837,9 @@ def test_deletion_vectors_lifecycle(spark, tmp_path):
         tp.delete_where_dv("id = 1")
 
 
-def test_file_scoped_delete_and_update_copy_on_write(spark, tmp_path):
+def test_file_scoped_delete_and_update_copy_on_write(
+    spark, tmp_path, monkeypatch, fail_rename
+):
     """Selective DELETE/UPDATE on an unpartitioned table replaces ONLY
     the files containing matched rows — untouched files stay
     byte-identical in place (Delta's touched-files rewrite), counts
@@ -758,6 +867,10 @@ def test_file_scoped_delete_and_update_copy_on_write(spark, tmp_path):
     files1 = set(t._data_files())
     untouched = files1 & set(files0)
     assert len(untouched) == 7  # seven originals survive in place
+    # each data file moved with its checksum sidecar, none left orphaned
+    assert {f for f in os.listdir(t.path) if f.endswith(".crc")} == {
+        f".{f}.crc" for f in files1
+    }
     for f in untouched:  # byte-identical: never rewritten
         assert os.path.getmtime(os.path.join(t.path, f)) == files0[f]
     assert t.read().count() == 700
@@ -773,22 +886,13 @@ def test_file_scoped_delete_and_update_copy_on_write(spark, tmp_path):
     assert t.read().where("id = 100").select("v").first()["v"] == 100
 
     # crash mid-replacement restores the moved live files
-    real_rename = os.rename
-    calls = {"n": 0}
-
-    def failing_rename(src, dst):
-        # fail when the staged replacement file moves into the live dir
-        if "__staging__" in src and dst.startswith(t.path):
-            raise OSError("simulated crash during file swap")
-        return real_rename(src, dst)
-
-    import unittest.mock as mock
-
     before = set(t._data_files())
     count_before = t.read().count()
-    with mock.patch("os.rename", side_effect=failing_rename):
-        with pytest.raises(OSError, match="simulated crash"):
-            t.delete_where("id >= 600 AND id < 700")
+    # fail when the staged replacement file moves into the live dir
+    fail_rename(lambda src, dst: "__staging__" in src and dst.startswith(t.path))
+    with pytest.raises(OSError, match="simulated crash"):
+        t.delete_where("id >= 600 AND id < 700")
+    monkeypatch.undo()
     assert set(t._data_files()) == before  # live tree fully restored
     assert t.read().count() == count_before
 
