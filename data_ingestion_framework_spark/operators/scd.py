@@ -16,10 +16,13 @@ Spark-first design: each operator is a pure DataFrame program
 ``ParquetTable.overwrite`` (sources/tablestore.py). For Delta/Iceberg
 targets, ``sinks/merge_sql.py`` renders the equivalent ``MERGE INTO``
 statements from the same inputs (equivalence pinned by
-``tests/test_merge_sql.py``). All
-per-key reasoning is one shuffle on the business key (window + join
-share the partitioning); change detection compares md5 hashes computed
-JVM-side, so the exchange carries keys + 32-byte hashes, not full rows.
+``tests/test_merge_sql.py``). A merge
+moves only the rows the batch touches: the batch itself and the
+target's live rows whose key it carries, found by a semi join against
+the batch keys (small, so AQE broadcasts them). Those rows take the one
+shuffle on the business key, which every per-key window then shares;
+the rest of the target passes through an anti join without being
+shuffled. Change detection compares md5 hashes computed JVM-side.
 
 Contract columns (writers/writer.py:19): ``start_time``, ``end_time``,
 ``is_current``, ``delete_time`` (+ passthrough ``row_creation_time``,
@@ -85,7 +88,8 @@ def stamp_scd2_initial(
     """Initial-load SCD2 stamping (writers/writer.py:84-107): order the
     versions of each key by ``order_col``; ``start_time`` = own order
     value, ``end_time`` = next version's start (null for the latest),
-    ``is_current`` = 1 only on the latest."""
+    ``is_current`` = 1 only on the latest. ``scd2_apply`` stamps its
+    merged versions with it too."""
     w = W.partitionBy(*key_cols).orderBy(
         F.col(order_col).asc(), *[F.col(c).asc() for c in (tiebreak_cols or key_cols)]
     )
@@ -185,107 +189,105 @@ def scd2_apply(
     rn-stamped SourceDataUpdated) and the curated "merge_key trick"
     (Raw-To-Curated-Material_Dim.py:219-285) — which both exist only to
     make one ``MERGE`` statement do a close-out *and* an insert — as a
-    direct computation of the new table state:
+    direct computation of the new table state.
 
-    1. Source versions are ordered per key; consecutive versions with an
-       unchanged ``hdiff`` collapse (no spurious history rows), and a
-       first version identical to the target's current row is dropped.
-    2. Surviving versions get chained validity stamps.
-    3. The target's current row is closed out at the first new version's
-       start (``end_time``, ``is_current=0``).
-    4. Full-extract mode soft-deletes current rows whose key is absent
-       from the source (``delete_time`` + close-out), matching
-       ``WHEN NOT MATCHED BY SOURCE THEN UPDATE`` (writers/writer.py:251).
-    5. Historical rows pass through untouched.
+    Only the *touched* rows move: the live rows (``is_current = 1`` and
+    no ``delete_time``) whose key is in the batch, found by a left-semi
+    join against the batch keys, are unioned with the batch versions
+    and hash-partitioned on the key once. Windows on that partitioning,
+    ordered by ``(timestamp, live row first)``, then compute:
 
-    Re-applying the same source batch yields the identical state
-    (idempotent replay — SURVEY §7.4 hard part #1).
+    0. Replay protection: only versions strictly newer than the key's
+       current ``start_time`` apply, so a replayed batch (same files,
+       same mtimes) no-ops — the idempotence the reference gets from
+       MERGE matching on full-row equality (writers/writer.py:505-524).
+    1. Change detection: a version whose ``hdiff`` equals the previous
+       row's is dropped. The previous row of a key's first new version
+       is its live row, so consecutive unchanged versions collapse and
+       a first version equal to the current image adds no history.
+    2. Validity stamps (``stamp_scd2_initial`` over the same order):
+       each surviving version starts at its own order value and ends
+       at the next one's (``is_current = 1`` only on the last); the
+       live row of a key that received a new version is closed out at
+       the first new version's start.
+    3. Everything else passes through without a shuffle: closed rows,
+       and live rows whose key is not in the batch (a left-anti join).
+       Full-extract mode soft-deletes the latter (``delete_time`` +
+       close-out), matching ``WHEN NOT MATCHED BY SOURCE THEN UPDATE``
+       (writers/writer.py:251).
+
+    The shuffled volume is the batch plus its touched live rows at full
+    width, so the merge is cheap when a batch touches few live keys (an
+    incremental extract) and moves the whole live state when it
+    touches all of them (a full extract, whose batch carries every
+    live key).
+
+    An initial load (``target is None``) runs steps 1-2 over the batch
+    alone. The result has the target's columns first, then source-only
+    ones (schema widening), with ``unionByName`` typing. Re-applying
+    the same source batch yields the identical state (idempotent replay
+    — SURVEY §7.4 hard part #1).
     """
-    src = source
     if compare_cols is None:
         # the order column is batch metadata, not business state — a
         # re-sent identical row with a newer mtime is NOT a new version
-        compare_cols = [c for c in _data_cols(src, key_cols) if c != order_col]
-    src = src.withColumn("__hdiff", hash_diff(src, compare_cols))
-
-    if target is not None:
-        live = target.where((F.col("is_current") == 1) & F.col("delete_time").isNull())
-        closed = target.where(~((F.col("is_current") == 1) & F.col("delete_time").isNull()))
-        cur_info = live.withColumn("__cur_hdiff", hash_diff(live, compare_cols)).select(
-            *key_cols,
-            F.col("start_time").alias("__cur_start"),
-            "__cur_hdiff",
-        )
-    else:
-        live = None
-        closed = None
-        cur_info = None
-
-    # (0) replay protection: only versions strictly newer than the key's
-    # current start_time apply. A replayed batch (same files, same
-    # mtimes) therefore no-ops — the idempotence the reference gets from
-    # MERGE matching on full-row equality (writers/writer.py:505-524).
-    if cur_info is not None:
-        src = src.join(cur_info, on=key_cols, how="left")
-        src = src.where(
-            F.col("__cur_start").isNull()
-            | (F.col(order_col).cast("timestamp") > F.col("__cur_start"))
-        )
-
-    # (1) collapse consecutive unchanged versions within the batch, and
-    # drop a leading version equal to the target's current image.
-    w_asc = W.partitionBy(*key_cols).orderBy(F.col(order_col).asc(), *key_cols)
-    src = src.withColumn("__prev_hdiff", F.lag("__hdiff").over(w_asc))
-    if cur_info is not None:
-        changed = (
-            (F.col("__prev_hdiff").isNull() & (
-                F.col("__cur_hdiff").isNull() | (F.col("__hdiff") != F.col("__cur_hdiff"))
-            ))
-            | (F.col("__prev_hdiff").isNotNull() & (F.col("__hdiff") != F.col("__prev_hdiff")))
-        )
-    else:
-        changed = F.col("__prev_hdiff").isNull() | (
-            F.col("__hdiff") != F.col("__prev_hdiff")
-        )
-    new_versions = src.where(changed).drop(
-        "__prev_hdiff", "__cur_hdiff", "__cur_start", "__hdiff"
+        compare_cols = [c for c in _data_cols(source, key_cols) if c != order_col]
+    batch = source.withColumns(
+        {
+            "__tag": F.lit(1),
+            "__ts": F.col(order_col).cast("timestamp"),
+            "__hdiff": hash_diff(source, compare_cols),
+        }
     )
-
-    # (2) chained validity stamps for surviving versions.
-    stamped = stamp_scd2_initial(new_versions, key_cols, order_col)
-
+    tag, ts = F.col("__tag"), F.col("__ts")
+    by_key = W.partitionBy(*key_cols)
+    in_order = by_key.orderBy("__ts", "__tag")
     if target is None:
-        return stamped
-
-    # (3) close out the current row of keys that received a new version.
-    first_new = stamped.groupBy(*key_cols).agg(
-        F.min("start_time").alias("__new_start")
-    )
-    live_joined = live.join(first_new, on=key_cols, how="left")
-    closed_out = (
-        live_joined.where(F.col("__new_start").isNotNull())
-        .withColumn("end_time", F.col("__new_start"))
-        .withColumn("is_current", F.lit(0))
-        .drop("__new_start")
-    )
-    untouched_live = live_joined.where(F.col("__new_start").isNull()).drop("__new_start")
-
-    # (4) full-extract soft delete for keys absent from the source.
-    if full_extract:
-        ts = F.lit(deleted_at).cast("timestamp") if deleted_at else F.current_timestamp()
-        src_keys = source.select(*key_cols).distinct()
-        gone = untouched_live.join(src_keys, on=key_cols, how="left_anti").withColumns(
-            {"delete_time": ts, "end_time": ts, "is_current": F.lit(0)}
+        rows = batch
+    else:
+        is_live = (F.col("is_current") == 1) & F.col("delete_time").isNull()
+        live = target.where(is_live)
+        keys = source.select(*key_cols)
+        touched = live.join(keys, on=key_cols, how="left_semi").withColumns(
+            {
+                "__tag": F.lit(0),
+                "__ts": F.col("start_time"),
+                "__hdiff": hash_diff(live, compare_cols),
+            }
         )
-        kept = untouched_live.join(src_keys, on=key_cols, how="left_semi")
-        untouched_live = kept.unionByName(gone)
+        # the batch's own SCD columns (control-column placeholders) are
+        # restamped below; dropping them keeps the live rows' values
+        rows = touched.unionByName(batch.drop(*SCD_COLS), allowMissingColumns=True)
+        # (0) replay protection
+        rows = rows.withColumn(
+            "__cur", F.max(F.when(tag == 0, ts)).over(by_key)
+        ).where((tag == 0) | F.col("__cur").isNull() | (ts > F.col("__cur")))
+    # (1) change detection against the previous row (the live row first)
+    rows = rows.withColumn("__prev", F.lag("__hdiff").over(in_order)).where(
+        (tag == 0) | F.col("__prev").isNull() | (F.col("__hdiff") != F.col("__prev"))
+    )
+    # (2) chained validity stamps over the same window order; a live
+    # row is current (its end_time is NULL), so it keeps its stamps
+    # unless a new version follows and closes it out at its start
+    merged = stamp_scd2_initial(rows, key_cols, "__ts", tiebreak_cols=["__tag"]).drop(
+        "__tag", "__ts", "__hdiff", "__cur", "__prev"
+    )
+    if target is None:
+        return merged
 
-    # (5) assemble the new state over the union of both schemas (see
-    # scd1_apply: target-only and source-only columns both survive).
+    # (3) untouched live rows (soft-deleted on a full extract) and
+    # closed rows pass through; the union keeps the target's columns
+    # first and adds source-only ones (see scd1_apply)
+    untouched = live.join(keys, on=key_cols, how="left_anti")
+    if full_extract:
+        gone = F.lit(deleted_at).cast("timestamp") if deleted_at else F.current_timestamp()
+        untouched = untouched.withColumns(
+            {"delete_time": gone, "end_time": gone, "is_current": F.lit(0)}
+        )
     return (
-        closed.unionByName(closed_out)
-        .unionByName(untouched_live)
-        .unionByName(stamped, allowMissingColumns=True)
+        target.where(~is_live)
+        .unionByName(untouched)
+        .unionByName(merged, allowMissingColumns=True)
     )
 
 

@@ -151,15 +151,18 @@ class PipelineBuilder:
     def _run_bronze(self) -> None:
         """Raw append to bronze (engine.py:162-181)."""
         c = self.config
-        # Cursor comes from Spark's own clock: collect() renders the
-        # timestamp in the session timezone and F.lit() re-interprets it
-        # in the same timezone, so the bronze slice in _run_silver stays
-        # correct even after set_session_timezone — a driver-side
-        # datetime.now(utc) would be offset by the TZ delta and could
-        # silently select zero rows.
-        self.bronze_row_creation_time = self.spark.sql(
-            "SELECT current_timestamp() AS t"
-        ).collect()[0]["t"]
+        if c.streaming:
+            # Only streaming bronze needs a clock cursor (batch bronze
+            # slices by commit, see _run_silver). It comes from Spark's
+            # own clock: collect() renders the timestamp in the session
+            # timezone and F.lit() re-interprets it in the same
+            # timezone, so the slice stays correct even after
+            # set_session_timezone — a driver-side datetime.now(utc)
+            # would be offset by the TZ delta and could silently select
+            # zero rows.
+            self.bronze_row_creation_time = self.spark.sql(
+                "SELECT current_timestamp() AS t"
+            ).collect()[0]["t"]
         bronze_writes = c.writes_for_layer("bronze")
         if not bronze_writes:
             return

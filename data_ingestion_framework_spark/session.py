@@ -99,6 +99,14 @@ def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
     ``spark.sql.execution.arrow.localRelationThreshold`` (48 MB by
     default) become an Arrow-batch RDD instead, still without Python
     workers."""
+    return spark.createDataFrame(*arrow_rows(rows, schema))
+
+
+def arrow_rows(rows, schema) -> tuple:
+    """``(pyarrow.Table, StructType)`` of driver-built ``rows`` under
+    ``schema`` (a ``StructType`` or a DDL string), read as
+    :func:`local_frame` reads them — the one conversion behind both
+    that frame and ``ParquetTable.append_rows``' driver-written file."""
     import datetime
 
     import pyarrow as pa
@@ -127,7 +135,7 @@ def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
         [pa.array(col, type=f.type) for col, f in zip(cols, arrow)],
         schema=arrow,
     )
-    return spark.createDataFrame(table, schema)
+    return table, schema
 
 
 def set_session_timezone(spark: SparkSession, tz: str) -> None:

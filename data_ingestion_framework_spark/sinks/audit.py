@@ -15,21 +15,23 @@ our merge operators report their own insert/update/delete counts
 
 from __future__ import annotations
 
+import datetime as dt
 import getpass
 import json
 
-from pyspark.sql import DataFrame, Row, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from data_ingestion_framework_spark.session import local_frame
-from data_ingestion_framework_spark.sources.tablestore import ParquetTable
+from data_ingestion_framework_spark.sources.tablestore import AppendRowsRefused, ParquetTable
 
 AUDIT_SCHEMA = T.StructType(
     [
         T.StructField("table_name", T.StringType()),
         T.StructField("audit_operation", T.StringType()),
-        T.StructField("audit_timestamp", T.TimestampType()),
+        # non-nullable, as the footer of a row stamped by Spark's
+        # current_timestamp() logs it, so tables written either way agree
+        T.StructField("audit_timestamp", T.TimestampType(), False),
         T.StructField("audit_user", T.StringType()),
         T.StructField("audit_info", T.StringType()),
         T.StructField("job_id", T.StringType()),
@@ -76,29 +78,36 @@ class AuditLogger:
         base_file_path: str = "",
     ) -> None:
         """One audit row per operation (audit/auditlogs.py:16-24).
-        ``info`` is JSON-serialized into ``audit_info``. The row is a
-        ``local_frame`` (a JVM ``LocalRelation``), so writing it starts
-        no Python worker, and the table append plans from the logged
-        schema, so the only Spark job is the write itself."""
-        row = Row(
-            table_name=table_name,
-            audit_operation=operation,
-            audit_timestamp=None,  # stamped below server-side
-            audit_user=getpass.getuser(),
-            audit_info=json.dumps(info or {}, sort_keys=True, default=str),
-            job_id=self.job_id,
-            base_file_path=base_file_path,
-        )
-        df = local_frame(self.spark, [row], AUDIT_SCHEMA).withColumn(
-            "audit_timestamp", F.current_timestamp()
+        ``info`` is JSON-serialized into ``audit_info``;
+        ``audit_timestamp`` is the driver's clock at the call. The table
+        write is ``ParquetTable.append_rows``: one parquet file written
+        on the driver plus a commit record, so logging starts no Spark
+        job. A table that path refuses (write-time rules such as
+        constraints, or a schema other than ``AUDIT_SCHEMA``) takes the
+        row through ``ParquetTable.append`` instead. The JDBC mirror
+        writes the same row as a ``local_frame`` (a JVM
+        ``LocalRelation``, no Python worker)."""
+        row = (
+            table_name,
+            operation,
+            dt.datetime.now(dt.timezone.utc),
+            getpass.getuser(),
+            json.dumps(info or {}, sort_keys=True, default=str),
+            self.job_id,
+            base_file_path,
         )
         if self.table is not None:
-            self.table.append(df)
+            try:
+                self.table.append_rows([row], AUDIT_SCHEMA)
+            except AppendRowsRefused:
+                # a table with write-time rules or another schema takes
+                # the row through Spark, as every write did before
+                self.table.append(local_frame(self.spark, [row], AUDIT_SCHEMA))
         if self.jdbc_url is not None:
             from data_ingestion_framework_spark.sources.batch import write_jdbc
 
             write_jdbc(
-                df,
+                local_frame(self.spark, [row], AUDIT_SCHEMA),
                 self.jdbc_url,
                 self.jdbc_table,
                 mode="append",

@@ -219,8 +219,12 @@ def scd2_state_sql(
     """Post-merge SCD2 table state as a pure SELECT — the executable
     equivalent of the :func:`scd2_merge_sql` pair under the engine's
     stamping convention (validity from ``order_col``, operators/scd.py
-    ``scd2_apply``): replay protection, consecutive-unchanged collapse,
-    chained validity stamps, current-row close-out and FE soft deletes.
+    ``scd2_apply``, whose docstring numbers the steps): replay
+    protection (0), consecutive-unchanged collapse (1), chained validity
+    stamps and current-row close-out (2), pass-through and FE soft
+    deletes (3). The SQL keeps the join-based shape of the ``MERGE``
+    pair it mirrors; ``scd2_apply`` computes the same state with one
+    shuffle of the touched rows.
 
     ``columns`` = business columns (keys included, SCD columns
     excluded); ``compare_cols`` defaults to the non-key business
@@ -260,6 +264,8 @@ def scd2_state_sql(
         )
 
     del_ts = f"TIMESTAMP '{deleted_at}'" if deleted_at else "current_timestamp()"
+    # untouched live rows pass through, soft-deleted on a full extract
+    # when their key is absent from the source (step 3)
     fe_untouched = (
         (
             f"kept AS (\n"
@@ -311,6 +317,7 @@ def scd2_state_sql(
         f"  WHERE (prev_img IS NULL AND (cur_img IS NULL OR NOT ({img} <=> cur_img)))\n"
         f"     OR (prev_img IS NOT NULL AND NOT ({img} <=> prev_img))\n"
         f"),\n"
+        # chained stamps and the live row's close-out (step 2)
         f"stamped AS (\n"
         f"  {stamp_select}  FROM new_versions\n"
         f"),\n"

@@ -86,6 +86,12 @@ class CheckConstraintViolation(ValueError):
     FALSE (NULL satisfies, per the SQL standard and Delta)."""
 
 
+class AppendRowsRefused(ValueError):
+    """``ParquetTable.append_rows`` cannot write these rows as
+    :meth:`ParquetTable.append` would (a write-time table rule, or a
+    schema that differs from the table's); nothing was written."""
+
+
 class ConcurrentCommitError(RuntimeError):
     """Another writer took this commit seq — put-if-absent arbitration
     (``_record_commit``) refused to overwrite its record."""
@@ -103,6 +109,33 @@ def _keep_column_order(table_schema: str, file_schema: str) -> str:
         )
 
     return table_schema if cols(table_schema) == cols(file_schema) else file_schema
+
+
+def _fits(rows: T.DataType, table: T.DataType) -> bool:
+    """Rows of type ``rows`` write as ``table``: the same type, except
+    that a non-nullable field, element or map value of ``rows`` may
+    stand for a nullable one of ``table`` (never the reverse). Spark
+    reads files as nullable, so any rewrite logs a non-nullable column
+    as nullable."""
+    if isinstance(rows, T.StructType) and isinstance(table, T.StructType):
+        return len(rows.fields) == len(table.fields) and all(
+            r.name == t.name
+            and r.metadata == t.metadata
+            and (t.nullable or not r.nullable)
+            and _fits(r.dataType, t.dataType)
+            for r, t in zip(rows.fields, table.fields)
+        )
+    if isinstance(rows, T.ArrayType) and isinstance(table, T.ArrayType):
+        return (table.containsNull or not rows.containsNull) and _fits(
+            rows.elementType, table.elementType
+        )
+    if isinstance(rows, T.MapType) and isinstance(table, T.MapType):
+        return (
+            (table.valueContainsNull or not rows.valueContainsNull)
+            and _fits(rows.keyType, table.keyType)
+            and _fits(rows.valueType, table.valueType)
+        )
+    return rows == table
 
 
 def _is_hidden(rel: str) -> bool:
@@ -2121,6 +2154,108 @@ class ParquetTable:
         new = [f for f in self._data_files() if f not in before]
         rec = self._record_commit("append", metrics, new_files=new)
         self._advance_identity_hwm(rec)
+
+    #: table properties whose write-time rules only :meth:`append` runs
+    _SPARK_WRITE_RULES = (
+        "constraints",
+        "identity",
+        "generated_columns",
+        "column_defaults",
+        "added_columns",
+        "column_mapping",
+        "dropped_columns",
+        "widened_schema",
+        "schema_evolved",
+    )
+
+    def append_rows(self, rows, schema) -> None:
+        """Append driver-built ``rows`` (tuples, ``Row`` objects or
+        dicts, read as ``session.local_frame`` reads them) under
+        ``schema`` (a ``StructType`` or DDL string) without a Spark job:
+        one parquet file is written on the driver with ``pyarrow`` and
+        committed through :meth:`_record_commit`. Meant for
+        control-plane rows such as audit records, where a Spark write
+        costs far more than the row.
+
+        The file carries Spark's row-schema footer key
+        (``org.apache.spark.sql.parquet.row.metadata``): the table's
+        logged schema string itself, or on a new table ``schema`` in
+        Spark's own field order, so the commit logs the schema a Spark
+        write logs and reads plan from it. It is written under a
+        ``.``-prefixed name (invisible to scans and to the commit log)
+        and renamed in.
+
+        Raises :class:`AppendRowsRefused` (a ``ValueError``) — writing
+        no file and no commit — when :meth:`append`'s write-time rules
+        would apply, which this path does not run: the table is
+        partitioned; it has constraints, an identity column, generated
+        columns, column defaults, added columns, column mapping or
+        dropped columns, a widened schema or an evolved schema. It also
+        refuses when ``schema`` differs from the table's logged schema
+        (or, on a log without one, from a live file's Spark footer
+        schema; a table with neither is refused too) other than by a
+        non-nullable column where the table's is nullable, or when a
+        non-nullable column of ``schema`` holds a NULL. A table with no
+        commit and no data file takes ``schema`` as its own."""
+        import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        from data_ingestion_framework_spark.session import arrow_rows
+
+        table, schema = arrow_rows(rows, schema)
+        props = self.properties()
+        rules = [k for k in self._SPARK_WRITE_RULES if props.get(k)]
+        if self.partition_by:
+            rules.insert(0, "partition_by")
+        if rules:
+            raise AppendRowsRefused(
+                f"append_rows: table {self.path} has {rules}, whose "
+                "write-time rules only append() applies — use append()"
+            )
+        logged = (self._latest_record() or {}).get("schema")
+        live = [] if logged is not None else self._live_files()
+        if live:
+            footer = pq.ParquetFile(os.path.join(self.path, live[0])).metadata
+            logged = (footer.metadata or {}).get(_SPARK_ROW_SCHEMA_KEY)
+            if logged is None:
+                raise AppendRowsRefused(
+                    f"append_rows: table {self.path} logs no schema and its "
+                    "files carry no Spark row schema to check rows against"
+                )
+        table_schema = T.StructType.fromJson(json.loads(logged)) if logged else schema
+        if not _fits(schema, table_schema):
+            raise AppendRowsRefused(
+                f"append_rows: schema {schema.simpleString()} differs from the "
+                f"table's {table_schema.simpleString()} (or in nullability, "
+                "nesting or field metadata)"
+            )
+        for f, col in zip(schema.fields, table.columns):
+            if not f.nullable and col.null_count:
+                raise AppendRowsRefused(
+                    f"append_rows: NULL in non-nullable column {f.name!r}"
+                )
+        if logged:
+            table = table.cast(to_arrow_schema(table_schema))
+        else:
+            logged = json.dumps(schema.jsonValue(), separators=(",", ":"))
+        name = f"part-00000-{uuid.uuid4()}-c000.snappy.parquet"
+        tmp = os.path.join(self.path, f".{name}")
+        os.makedirs(self.path, exist_ok=True)
+        try:
+            # store_schema stays on: pyarrow 16 drops every key-value
+            # entry without it, Spark's key included (Spark ignores the
+            # ARROW:schema entry it adds). Driver rows are few, so
+            # dictionary pages would only add bytes.
+            pq.write_table(
+                table.replace_schema_metadata({_SPARK_ROW_SCHEMA_KEY: logged}),
+                tmp,
+                use_dictionary=False,
+            )
+            os.rename(tmp, os.path.join(self.path, name))
+        finally:
+            if os.path.exists(tmp):
+                os.unlink(tmp)
+        self._record_commit("append", None, new_files=[name])
 
     def overwrite(
         self,

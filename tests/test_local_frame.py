@@ -2,7 +2,7 @@
 ``LocalRelation``. Pinned here: value identity with
 ``createDataFrame(<list>)`` for every schema the package builds
 driver-side frames with, and no Python-RDD scan in the plans that
-replaced it (the audit row, the rank offsets)."""
+replaced it (the rank offsets)."""
 
 from __future__ import annotations
 
@@ -28,7 +28,8 @@ _CASES = {
     ),
     "audit_row": (
         None,  # AUDIT_SCHEMA, filled in below
-        [Row(table_name="t", audit_operation="append", audit_timestamp=None,
+        [Row(table_name="t", audit_operation="append",
+             audit_timestamp=datetime.datetime(2024, 1, 1, tzinfo=datetime.timezone.utc),
              audit_user="u", audit_info='{"layer": "bronze"}', job_id="j",
              base_file_path="")],
     ),
@@ -98,37 +99,6 @@ def test_local_frame_matches_create_dataframe(spark, case):
         assert got.collect() == want.collect()
         plan = got._jdf.queryExecution().optimizedPlan().toString()
         assert plan.startswith("LocalRelation"), plan
-
-
-def test_audit_log_row_has_no_python_rdd(spark, tmp_path, monkeypatch):
-    """``AuditLogger.log`` appends a LocalRelation frame: its plan holds
-    no ``ExistingRDD`` scan, so the append starts no Python worker."""
-    from data_ingestion_framework_spark.sinks.audit import AuditLogger
-    from data_ingestion_framework_spark.sources.tablestore import ParquetTable
-    from tools.plan_audit import python_rdd_scans
-
-    appended = []
-    append = ParquetTable.append
-
-    def spy(self, df, *a, **kw):
-        appended.append(df)
-        return append(self, df, *a, **kw)
-
-    monkeypatch.setattr(ParquetTable, "append", spy)
-    log = AuditLogger(spark, str(tmp_path / "audit"), job_id="job-1")
-    log.log("orders", "append", {"layer": "bronze"})
-    log.log("orders", "merge", {"layer": "silver"})
-    assert len(appended) == 2
-    for df in appended:
-        jplan = df._jdf.queryExecution().executedPlan()
-        assert "ExistingRDD" not in jplan.toString()
-        assert python_rdd_scans(jplan) == 0
-    rows = sorted(log.read().collect(), key=lambda r: r["audit_operation"])
-    assert [(r["audit_operation"], r["audit_info"], r["job_id"]) for r in rows] == [
-        ("append", '{"layer": "bronze"}', "job-1"),
-        ("merge", '{"layer": "silver"}', "job-1"),
-    ]
-    assert all(r["audit_timestamp"] is not None for r in rows)
 
 
 def test_rank_offsets_are_a_local_relation(spark):

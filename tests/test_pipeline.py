@@ -125,6 +125,89 @@ def test_medallion_cursor_survives_non_utc_session_tz(spark, tmp_path):
         spark.conf.set("spark.sql.session.timeZone", prior)
 
 
+def test_streaming_bronze_cursor_survives_non_utc_session_tz(spark, tmp_path):
+    """Streaming bronze has no commit cursor, so silver slices bronze by
+    the run's ``row_creation_time`` clock cursor (taken only for a
+    streaming config). Under a non-UTC session time zone the slice must
+    still select this run's rows, and only them."""
+    prior = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    try:
+        landing = _landing(
+            spark, tmp_path / "landing_stz", [Row(pk=1, val="a", amt=1.0)]
+        )
+        row = _config_row(landing, tmp_path, streaming=True)
+        row["writes"] = json.dumps(
+            [
+                {"table_medallion_layer": "bronze", "path": f"{tmp_path}/bronze_stz",
+                 "mode": "append", "checkpointLocation": f"{tmp_path}/ckpt_stz"},
+                {"table_medallion_layer": "silver", "path": f"{tmp_path}/silver_stz",
+                 "mode": "merge", "scd_type": 2},
+            ]
+        )
+        row["audit_write"] = "False"
+        pb = PipelineBuilder(spark, PipelineConfig.from_row(row))
+        pb.run_medallion()
+        assert pb.bronze_row_creation_time is not None
+        silver = spark.read.parquet(f"{tmp_path}/silver_stz")
+        assert [(r["pk"], r["val"]) for r in silver.collect()] == [(1, "a")]
+
+        _landing(spark, tmp_path / "landing_stz", [Row(pk=2, val="b", amt=2.0)])
+        PipelineBuilder(spark, PipelineConfig.from_row(row)).run_medallion()
+        # a full extract: pk 1 is soft-deleted because this run's slice
+        # holds pk 2 alone — an empty slice would miss pk 2, an unsliced
+        # read would keep pk 1 current
+        silver = spark.read.parquet(f"{tmp_path}/silver_stz")
+        assert sorted((r["pk"], r["val"], r["is_current"]) for r in silver.collect()) == [
+            (1, "a", 0), (2, "b", 1)
+        ]
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", prior)
+
+
+def test_audit_log_launches_no_spark_job(spark, tmp_path, launched_jobs):
+    """``AuditLogger.log`` writes its row on the driver
+    (``ParquetTable.append_rows``): no Spark job, on a fresh table or
+    an existing one, and the rows read back as logged."""
+    from data_ingestion_framework_spark.sinks.audit import AuditLogger
+
+    log = AuditLogger(spark, str(tmp_path / "audit"), job_id="job-1")
+    with launched_jobs() as ids:
+        log.log("orders", "append", {"layer": "bronze"})
+        log.log("orders", "merge", {"layer": "silver"})
+    assert ids == []
+    rows = sorted(log.read().collect(), key=lambda r: r["audit_operation"])
+    assert [(r["audit_operation"], r["audit_info"], r["job_id"]) for r in rows] == [
+        ("append", '{"layer": "bronze"}', "job-1"),
+        ("merge", '{"layer": "silver"}', "job-1"),
+    ]
+    assert all(r["audit_timestamp"] is not None for r in rows)
+
+
+def test_batch_medallion_run_job_budget(spark, tmp_path, launched_jobs):
+    """A steady batch-bronze ``run_medallion`` (bronze append, SCD2
+    silver merge, DQ, two audit rows) launches at most 5 Spark jobs:
+    the landing footer read, the bronze write, and the merge's batch-key
+    broadcast, key shuffle and write. No clock-cursor job, no audit
+    write job."""
+    landing = _landing(
+        spark, tmp_path / "landing_jb", [Row(pk=1, val="a", amt=1.0), Row(pk=2, val="b", amt=2.0)]
+    )
+    PipelineBuilder(spark, PipelineConfig.from_row(_config_row(landing, tmp_path))).run_medallion()
+    _landing(spark, tmp_path / "landing_jb", [Row(pk=1, val="a2", amt=3.0), Row(pk=3, val="c", amt=4.0)])
+    pb = PipelineBuilder(spark, PipelineConfig.from_row(_config_row(landing, tmp_path)))
+    with launched_jobs() as ids:
+        pb.run_medallion()
+    assert len(ids) <= 5, ids
+    assert pb.bronze_row_creation_time is None
+    silver = spark.read.parquet(f"{tmp_path}/silver").collect()
+    # the batch source re-reads the whole landing dir, so pk 2 stays
+    # current and pk 1's first file is a replay
+    assert sorted((r["pk"], r["val"], r["is_current"]) for r in silver) == [
+        (1, "a", 0), (1, "a2", 1), (2, "b", 1), (3, "c", 1)
+    ]
+
+
 def test_streaming_merge_pipeline(spark, tmp_path):
     landing = _landing(
         spark, tmp_path / "landing", [Row(pk=1, val="a", amt=1.0), Row(pk=2, val="b", amt=2.0)]

@@ -179,3 +179,73 @@ def test_no_phantom_reference_citations():
     finally:
         sys.path.pop(0)
     assert find_phantoms() == []
+
+
+def _subtrees(plan: str) -> list[tuple[str, list[str]]]:
+    """``(node line, its subtree's lines)`` for every node of a plan
+    tree string; a node's depth is the column its name starts at."""
+    # split on newlines only: str.splitlines() also breaks on the \x1e
+    # of the NULL sentinel that hash expressions print
+    lines = [ln for ln in plan.split("\n") if ln.strip()]
+    cols = [len(ln) - len(ln.lstrip(" :+-")) for ln in lines]
+    out = []
+    for i, ln in enumerate(lines):
+        j = i + 1
+        while j < len(lines) and cols[j] > cols[i]:
+            j += 1
+        out.append((ln, lines[i + 1 : j]))
+    return out
+
+
+def test_scd2_merge_shuffles_only_touched_rows(spark, tmp_path):
+    """The executed SCD2 merge of a table target has exactly one hash
+    exchange, on the key, and the target is never shuffled whole: its
+    only scan below that exchange reaches it through the semi join
+    against the batch keys (the live rows the batch touches), no
+    broadcast carries target rows, and the rest of the target passes
+    through without an exchange."""
+    import datetime as dt
+
+    from data_ingestion_framework_spark.operators import scd
+    from data_ingestion_framework_spark.session import local_frame
+    from data_ingestion_framework_spark.sources.tablestore import ParquetTable
+    from tools.plan_audit import audit_plan
+
+    t0 = dt.datetime(2024, 1, 1)
+    schema = "pk int, v string, mtime timestamp"
+    table = ParquetTable(spark, str(tmp_path / "dim"))
+    table.overwrite(
+        scd.scd2_apply(
+            None,
+            local_frame(spark, [(k, f"v{k}", t0) for k in range(200)], schema),
+            ["pk"],
+            "mtime",
+        )
+    )
+    batch_path = str(tmp_path / "batch")
+    local_frame(
+        spark,
+        [(k, f"w{k}", t0 + dt.timedelta(days=1)) for k in (3, 7, 500)],
+        schema,
+    ).write.parquet(batch_path)
+    merged = scd.scd2_apply(
+        table.read(), spark.read.parquet(batch_path), ["pk"], "mtime", full_extract=True
+    )
+    rows = merged.collect()
+    assert len(rows) == 203
+    plan = merged._jdf.queryExecution().executedPlan().toString()
+    assert audit_plan(plan)["exchanges"] == 1, plan
+    shuffled = broadcast = 0
+    for node, sub in _subtrees(plan.split("== Initial Plan ==")[0]):
+        # target scans: the batch has no SCD columns (scan locations are
+        # abbreviated in plan strings, so they cannot name the table)
+        scans = [i for i, ln in enumerate(sub) if "FileScan" in ln and "is_current" in ln]
+        if "Exchange hashpartitioning" in node and "Reused" not in node:
+            shuffled += 1
+            assert scans, plan
+            for i in scans:  # the semi join sits between exchange and scan
+                assert any("LeftSemi" in ln for ln in sub[:i]), plan
+        if "BroadcastExchange" in node:
+            broadcast += 1
+            assert not scans, plan
+    assert shuffled == 1 and broadcast >= 1, plan
