@@ -5,11 +5,22 @@ the same conversion *rules*, re-implemented as an ordered regex table
 (IIf→CASE WHEN, Nz→COALESCE, Date()/Now()→CURRENT_DATE/TIMESTAMP,
 Format→DATE_FORMAT, [bracket] identifier stripping, SELECT ... INTO →
 CREATE OR REPLACE TEMPORARY VIEW, table-name substitution).
+
+Also home of :func:`qident`, which the SQL-text expression builders use
+to name input columns.
 """
 
 from __future__ import annotations
 
 import re
+
+
+def qident(name: str) -> str:
+    """Backtick-quoted SQL identifier for a column NAME. Expression
+    builders that reference input columns textually (one ``F.expr``
+    parse instead of one Py4J round-trip per Column operator) quote
+    every name with it."""
+    return "`" + name.replace("`", "``") + "`"
 
 
 def _convert_iif(sql: str) -> str:

@@ -106,43 +106,51 @@ def apply_rules(
     """Evaluate rules, appending one ``__dq_<rule_id>`` violation flag per
     rule plus the reference's ``data_quality_valid_flag`` /
     ``data_quality_result_array`` columns
-    (di_landing_to_raw_generic_v2.py:585-611)."""
+    (di_landing_to_raw_generic_v2.py:585-611).
+
+    Every flag and both result columns come from one ``withColumns``
+    (one JVM analysis); the result columns restate the flag
+    expressions, which Spark's common-subexpression elimination
+    evaluates once per row. An
+    ``orphan_check`` first joins its FK keyset in as a ``__fk<i>``
+    column, dropped at the end; a ``unique_check`` flag is a window
+    count."""
     related = related or {}
-    flags: list[str] = []
+    flags: dict[str, Column] = {}
+    fks: list[str] = []
     for rule in rules:
         if not rule.enabled:
             continue
-        flag = f"__dq_{rule.rule_id}"
         if rule.rule_type in ROW_LOCAL_TYPES:
-            df = df.withColumn(flag, violation_expr(rule))
+            flag = violation_expr(rule)
         elif rule.rule_type == "orphan_check":  # :276-280 FK left join
-            fk = related[rule.related_table].select(
-                F.col(rule.related_column).alias("__fk")
+            fk = f"__fk{len(fks)}"
+            keys = related[rule.related_table].select(
+                F.col(rule.related_column).alias(fk)
             ).distinct()
-            df = df.join(
-                F.broadcast(fk), df[rule.column] == F.col("__fk"), "left"
-            ).withColumn(
-                flag, F.col(rule.column).isNotNull() & F.col("__fk").isNull()
-            ).drop("__fk")
+            df = df.join(F.broadcast(keys), df[rule.column] == F.col(fk), "left")
+            flag = F.col(rule.column).isNotNull() & F.col(fk).isNull()
+            fks.append(fk)
         elif rule.rule_type == "unique_check":  # :287-292 group-by-count>1
             grp = rule.grouping_columns or [rule.column]
-            w = W.partitionBy(*grp)
-            df = df.withColumn(flag, F.count(F.lit(1)).over(w) > 1)
+            flag = F.count(F.lit(1)).over(W.partitionBy(*grp)) > 1
         else:
             raise ValueError(f"unknown rule type: {rule.rule_type}")
-        flags.append(flag)
+        flags[f"__dq_{rule.rule_id}"] = flag
 
     result_arr = F.array_compact(
         F.array(
             *[
-                F.when(F.col(f"__dq_{r.rule_id}"), F.lit(r.rule_id))
+                F.when(flags[f"__dq_{r.rule_id}"], F.lit(r.rule_id))
                 for r in rules
                 if r.enabled
             ]
         )
     ) if flags else F.array().cast("array<string>")
-    valid = F.size(result_arr) == 0
-    return df.withColumn(RESULT_ARRAY, result_arr).withColumn(VALID_FLAG, valid)
+    df = df.withColumns(
+        {**flags, RESULT_ARRAY: result_arr, VALID_FLAG: F.size(result_arr) == 0}
+    )
+    return df.drop(*fks) if fks else df
 
 
 def violation_counts(df_with_flags: DataFrame, rules: list[DQRule]) -> DataFrame:

@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from data_ingestion_framework_spark.functions.hashes import hash_diff
+from data_ingestion_framework_spark.functions.sql_dialect import qident
 
 SCD_COLS = ["start_time", "end_time", "is_current", "delete_time"]
 
@@ -171,6 +172,54 @@ def scd1_apply(
     # on the source side, and source-only columns (schema widening)
     # appear as nulls on untouched rows — never silently dropped.
     return untouched.unionByName(latest, allowMissingColumns=True)
+
+
+def scd1_bucket_merge(
+    target: DataFrame,
+    source: DataFrame,
+    key_cols: list[str],
+    order_col: str,
+    bucket_col: str,
+) -> DataFrame:
+    """``scd1_apply`` for a key-hash-bucketed target, in one shuffle.
+
+    ``target`` holds the rows of the buckets the batch touches and
+    ``source`` is the batch, both carrying ``bucket_col`` (a function
+    of the key). Target rows (tag 0) and batch rows (tag 1) are
+    unioned and hash-partitioned on the bucket once. One window per
+    ``(bucket, key)``, batch rows first, then keeps:
+
+    - the latest batch row of each key (``dedupe_latest``'s order);
+    - every target row of a key the batch does not carry;
+    - every target row with a NULL key component, which
+      ``scd1_apply``'s equi anti join never matches.
+
+    The result is hash-partitioned on ``bucket_col``, so a partition-
+    scoped write of it needs no second exchange to leave one file per
+    bucket (``ParquetTable._writer``). Unbucketed merges keep
+    ``scd1_apply``: there the target passes its anti join unshuffled.
+    Column order and union typing are ``scd1_apply``'s: target columns
+    first, then source-only ones. The window and the filter are SQL
+    text: one parse each where Column operators cost one Py4J round
+    trip apiece, which a micro-batch pays on every trigger."""
+    over = "OVER (PARTITION BY {} ORDER BY {})".format(
+        ", ".join(qident(c) for c in [bucket_col, *key_cols]),
+        ", ".join(f"{qident(c)} DESC" for c in ["__tag", order_col, *key_cols]),
+    )
+    null_key = " OR ".join(f"{qident(c)} IS NULL" for c in key_cols)
+    return (
+        target.withColumn("__tag", F.lit(0))
+        .unionByName(source.withColumn("__tag", F.lit(1)), allowMissingColumns=True)
+        .repartition(bucket_col)
+        .withColumns(
+            {
+                "__rn": F.expr(f"row_number() {over}"),
+                "__first": F.expr(f"first(__tag) {over}"),
+            }
+        )
+        .where(f"CASE WHEN __tag = 1 THEN __rn = 1 ELSE __first = 0 OR {null_key} END")
+        .drop("__tag", "__rn", "__first")
+    )
 
 
 def scd2_apply(

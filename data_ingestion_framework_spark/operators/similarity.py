@@ -18,6 +18,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from data_ingestion_framework_spark.functions.sql_dialect import qident
 from data_ingestion_framework_spark.session import local_frame
 
 
@@ -144,12 +145,6 @@ def matrix_literal(rows: list[list[float]]) -> Column:
     values are bit-identical to the ``F.lit`` form the oracles assume.
     """
     return F.expr(_matrix_sql(rows))
-
-
-def _qident(name: str) -> str:
-    """Backtick-quoted SQL identifier for a column NAME (the r16 expr
-    builders reference input columns textually)."""
-    return "`" + name.replace("`", "``") + "`"
 
 
 # --- SQL-text twins of the array-math primitives (r16 opt) -----------------
@@ -410,7 +405,7 @@ def _nearest_cells(
     operators as the lambda form (pinned by
     tests/test_expr_sql_twins.py), so cell assignments are unchanged
     and the DuckDB oracles still match."""
-    dv = _dv_sql(_qident(vec_col))
+    dv = _dv_sql(qident(vec_col))
     # cosine(dv, c): `cosine` re-casts BOTH sides to double exactly as
     # the Column form did (a double→double transform is value-neutral
     # but kept so the twin test compares identical shapes)
@@ -1311,7 +1306,7 @@ def _pq_sub(vec: Column, sub: int, dsub: int) -> Column:
 
 def _pq_sub_sql(vec: str, sub: int, dsub: int) -> str:
     """SQL twin of :func:`_pq_sub` over a column NAME."""
-    return f"slice({_dv_sql(_qident(vec))}, {sub * dsub + 1}, {dsub})"
+    return f"slice({_dv_sql(qident(vec))}, {sub * dsub + 1}, {dsub})"
 
 
 def _pq_code(vec: str, sub: int, codebook: list[list[float]], dsub: int) -> Column:

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window as W
 
+from data_ingestion_framework_spark.functions.sql_dialect import qident
 from data_ingestion_framework_spark.operators.skew import spread_for_compute
 from data_ingestion_framework_spark.session import local_frame
 
@@ -1118,7 +1119,7 @@ def _bpe_merge_chain(pairs: list[tuple[str, str]], syms_col: str = "syms") -> tu
             for l, r in pairs
         ]
     )
-    syms = "`" + syms_col.replace("`", "``") + "`"
+    syms = qident(syms_col)
     for i in range(1, len(pairs) + 1):
         p = f"element_at(__mp, {i})"
         syms = (

@@ -65,8 +65,11 @@ def _touched_buckets(df: DataFrame) -> list[int]:
 
 def _pruned_target(table: ParquetTable, buckets: list[int]) -> DataFrame:
     """Read ONLY the touched buckets' partitions (PartitionFilters prune
-    the rest at planning) — the merge never scans data it cannot change."""
-    return table.read().where(F.col(BUCKET_COL).isin(buckets))
+    the rest at planning) — the merge never scans data it cannot change.
+    The predicate is SQL text: ``isin`` makes one Py4J literal per
+    bucket. An empty batch touches no bucket."""
+    in_list = ", ".join(map(str, buckets))
+    return table.read().where(f"{BUCKET_COL} IN ({in_list})" if buckets else "false")
 
 
 def ordered_base_paths(df: DataFrame, depth: int = -1) -> list[str]:
@@ -230,6 +233,11 @@ def batch_write(
       table is bucketed (``partition_by=[BUCKET_COL]``) the merge is
       partition-scoped: only buckets present in the batch are read and
       rewritten (``num_buckets`` fixes the bucket count at first write).
+      A partition-scoped SCD1 merge (``scd.scd1_bucket_merge``) runs in
+      one shuffle, on the bucket: the partition-scoped write keeps that
+      partitioning instead of rebalancing, so the merge takes four
+      Spark jobs (touched-bucket collect, two; shuffle map; write) and
+      still leaves one file per touched bucket.
     """
     if except_columns:
         df = df.drop(*except_columns)  # SELECT * EXCEPT(...) OSS form
@@ -278,10 +286,15 @@ def batch_write(
                 # partition-scoped merge: read and rewrite ONLY the
                 # buckets this batch touches; all other partitions'
                 # files stay in place. O(touched data), not O(table).
+                # SCD1 merges in the bucket shuffle the write reuses.
                 buckets = _touched_buckets(df)
-                new_state = apply(
-                    _pruned_target(table, buckets), df, key_cols, order_col
-                )
+                target = _pruned_target(table, buckets)
+                if scd_type == 1:
+                    new_state = scd.scd1_bucket_merge(
+                        target, df, key_cols, order_col, BUCKET_COL
+                    )
+                else:
+                    new_state = apply(target, df, key_cols, order_col)
                 table.overwrite_partitions(
                     new_state,
                     extra_touched=[f"{BUCKET_COL}={b}" for b in buckets],

@@ -138,6 +138,39 @@ def _fits(rows: T.DataType, table: T.DataType) -> bool:
     return rows == table
 
 
+def _hash_partitioned_on(df: DataFrame, cols: list[str]) -> bool:
+    """Whether ``df`` is a ``repartition(*cols)`` with no fixed
+    partition count, seen only through ``Project``, ``Filter`` and
+    ``Window`` nodes whose partition spec holds those columns: nodes
+    Spark plans on the same partitioning, with no exchange of their
+    own. Read from the analyzed plan, with no planning pass. The
+    repartition's columns must be attributes of ``df``'s output (same
+    exprId), so a re-derived column of the same name does not count."""
+
+    def attr_ids(seq) -> set:
+        items = [seq.apply(i) for i in range(seq.size())]
+        return {e.exprId().id() for e in items if e.nodeName() == "AttributeReference"}
+
+    plan = df._jdf.queryExecution().analyzed()
+    node, windows = plan, []
+    while (name := node.nodeName()) in ("Project", "Filter", "Window"):
+        if name == "Window":
+            windows.append(node.partitionSpec())
+        node = node.child()
+    if name != "RepartitionByExpression" or node.optNumPartitions().isDefined():
+        return False
+    seq = node.partitionExpressions()
+    exprs = [seq.apply(i) for i in range(seq.size())]
+    if any(e.nodeName() != "AttributeReference" for e in exprs):
+        return False
+    out, want = plan.outputSet(), {e.exprId().id() for e in exprs}
+    return (
+        sorted(e.name() for e in exprs) == sorted(cols)
+        and all(out.contains(e) for e in exprs)
+        and all(want <= attr_ids(spec) for spec in windows)
+    )
+
+
 def _is_hidden(rel: str) -> bool:
     return any(seg.startswith(("_", ".")) for seg in rel.split(os.sep))
 
@@ -1971,7 +2004,12 @@ class ParquetTable:
         above the advisory size, so a commit leaves one file per
         touched partition instead of one per (write task, partition).
         Without AQE the hint is a plain hash shuffle on the same
-        columns: still one file per partition, none split. Partitioned
+        columns: still one file per partition, none split. The hint is
+        skipped when ``df`` is already hash-partitioned on exactly those
+        columns (:func:`_hash_partitioned_on`): that exchange clusters
+        the rows as well, with no partition split. A bucketed SCD1
+        merge (``operators/scd.py:scd1_bucket_merge``) is such a frame,
+        so its commit runs one shuffle, not two. Partitioned
         ``append`` is not clustered: the extra shuffle of the written
         data is measured only on small bucket rewrites, where opening
         files dominates, not on appends. ``overwrite()`` keeps the
@@ -1981,7 +2019,7 @@ class ParquetTable:
         if not self.partition_by:
             return df.write.mode(mode)
         cols = self._physical_partition_cols()
-        if cluster:
+        if cluster and not _hash_partitioned_on(df, cols):
             df = df.hint("rebalance", *cols)
         return df.write.mode(mode).partitionBy(*cols)
 
@@ -2764,8 +2802,12 @@ class ParquetTable:
         (``_writer(cluster=True)``): a touched partition below the
         advisory size is rewritten as ONE file, whatever the number of
         write tasks upstream (a 16-bucket streaming merge wrote ~70
-        files per commit without it, 16 with it). ``overwrite()`` is
-        exempt — compaction and z-order choose their own file layout.
+        files per commit without it, 16 with it). That costs one
+        shuffle of the written rows, or none when ``df`` is already a
+        ``repartition`` on exactly the partition columns (seen through
+        Project, Filter and Window nodes only), as a bucketed SCD1
+        merge is. ``overwrite()`` is exempt — compaction and z-order
+        choose their own file layout.
 
         ``extra_touched`` lists partition dirs (``col=value`` relative
         paths) that the commit logically touches even if ``df`` carries

@@ -105,6 +105,8 @@ def foreach_batch_scd_merge(
     from rewriting the whole table every trigger) and, its rows being
     clustered by bucket before the write, leaves one file per touched
     bucket — and an unbucketed target gets the staged full-state swap.
+    An SCD1 micro-batch into a bucketed target shuffles once: the merge
+    runs on the bucket repartition that also clusters the write.
 
     ``cdf_table`` (SCD1 only) additionally appends each micro-batch's
     Change Data Feed — the ``cdc.change_data_feed`` rows the merge

@@ -58,6 +58,90 @@ def test_orphan_and_unique_checks(spark):
     assert counts == {"r_orphan": 1, "r_uniq": 2}
 
 
+def _old_apply_rules(df, rules, related=None):
+    """Frozen copy of the previous ``apply_rules``: one ``withColumn``
+    per flag, then one per result column."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.window import Window as W
+
+    related = related or {}
+    flags = []
+    for rule in rules:
+        if not rule.enabled:
+            continue
+        flag = f"__dq_{rule.rule_id}"
+        if rule.rule_type in dq.ROW_LOCAL_TYPES:
+            df = df.withColumn(flag, dq.violation_expr(rule))
+        elif rule.rule_type == "orphan_check":
+            fk = related[rule.related_table].select(
+                F.col(rule.related_column).alias("__fk")
+            ).distinct()
+            df = df.join(
+                F.broadcast(fk), df[rule.column] == F.col("__fk"), "left"
+            ).withColumn(
+                flag, F.col(rule.column).isNotNull() & F.col("__fk").isNull()
+            ).drop("__fk")
+        else:
+            grp = rule.grouping_columns or [rule.column]
+            df = df.withColumn(flag, F.count(F.lit(1)).over(W.partitionBy(*grp)) > 1)
+        flags.append(flag)
+    result_arr = F.array_compact(
+        F.array(
+            *[
+                F.when(F.col(f"__dq_{r.rule_id}"), F.lit(r.rule_id))
+                for r in rules
+                if r.enabled
+            ]
+        )
+    ) if flags else F.array().cast("array<string>")
+    return df.withColumn(dq.RESULT_ARRAY, result_arr).withColumn(
+        dq.VALID_FLAG, F.size(result_arr) == 0
+    )
+
+
+@pytest.mark.parametrize("order", ["mixed", "reversed", "none"])
+def test_apply_rules_in_one_projection_equals_chained_columns(spark, order):
+    """Flags of every rule type, interleaved (row-local, orphan, unique,
+    a disabled rule, two orphan rules), come out in the same column
+    order, types and values as the chained-``withColumn`` version."""
+    df = spark.createDataFrame(
+        [
+            Row(id=1, fk=10, name="ok", bal=50.0, seg="A"),
+            Row(id=2, fk=99, name=None, bal=50.0, seg="Z"),
+            Row(id=3, fk=10, name="ok", bal=99999.0, seg="A"),
+            Row(id=3, fk=None, name="x", bal=None, seg="B"),
+            Row(id=4, fk=11, name="ok", bal=-1.0, seg=None),
+        ]
+    )
+    related = {
+        "dim": spark.createDataFrame([Row(k=10), Row(k=11), Row(k=10)]),
+        "small": spark.createDataFrame([Row(k=10)]),
+    }
+    rules = [
+        dq.DQRule("r_null", "null_check", column="name"),
+        dq.DQRule("r_orphan", "orphan_check", column="fk",
+                  related_table="dim", related_column="k"),
+        dq.DQRule("r_range", "range_check", column="bal", operator="between",
+                  threshold_low=0.0, threshold_high=1000.0),
+        dq.DQRule("r_uniq", "unique_check", column="id"),
+        dq.DQRule("r_off", "null_check", column="seg", enabled=False),
+        dq.DQRule("r_vals", "valid_values_check", column="seg", valid_values=["A", "B"]),
+        dq.DQRule("r_orphan2", "orphan_check", column="fk",
+                  related_table="small", related_column="k"),
+        dq.DQRule("r_uniq2", "unique_check", grouping_columns=["id", "seg"]),
+    ]
+    if order == "reversed":
+        rules = rules[::-1]
+    elif order == "none":
+        rules = []
+    new = dq.apply_rules(df, rules, related)
+    old = _old_apply_rules(df, rules, related)
+    assert new.schema == old.schema
+    assert new.columns[: len(df.columns)] == df.columns
+    key = lambda r: (r["id"], str(r["seg"]))  # noqa: E731
+    assert sorted(new.collect(), key=key) == sorted(old.collect(), key=key)
+
+
 def test_datatype_and_special_char_checks(spark):
     df = spark.createDataFrame(
         [Row(id=1, v="123"), Row(id=2, v="abc"), Row(id=3, v="12x")]

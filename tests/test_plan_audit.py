@@ -141,6 +141,29 @@ def test_single_partition_window_counter_is_alive(spark):
     assert r["exchanges"] >= 1, plan
 
 
+def test_single_partition_window_counter_reads_hash_lines(spark):
+    """A global-order window whose plan line prints the ``\\x1e`` NULL
+    sentinel of the hash expressions (a ``lag`` over a ``hash_diff``
+    column, defaulting to the sentinel) still counts:
+    ``str.splitlines()`` cut that line into fragments the feed-node
+    walk stopped at, so the counter read 0."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.window import Window as W
+
+    from data_ingestion_framework_spark.functions.hashes import _NULL, hash_diff
+    from tools.plan_audit import audit_plan
+
+    df = spark.range(20).withColumn("x", (F.col("id") % 3).cast("string"))
+    df = df.withColumn("h", hash_diff(df, ["x"])).withColumn(
+        "prev", F.lag("h", 1, _NULL).over(W.orderBy("id"))
+    )
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    window = next(ln for ln in plan.split("\n") if "Window [" in ln)
+    assert "\x1e" in window, plan
+    assert audit_plan(plan)["single_part_win"] == 1, plan
+
+
 def test_exchange_counter_sees_round_robin(spark):
     """ADVICE r13: plain ``repartition(n)`` plans
     ``Exchange RoundRobinPartitioning`` — a spelling the exchanges

@@ -658,6 +658,14 @@ def test_only_partition_scoped_commits_cluster(spark, tmp_path, monkeypatch):
     ))
     files = _files_by_partition(part)
     assert [len(files[p]) for p in sorted(files)] == [4, 1, 1, 4]
+    # already hash-partitioned on the partition column: that exchange
+    # clusters the write, and no rebalance shuffles it again
+    assert not _rebalanced(_write_plans(
+        monkeypatch,
+        lambda: part.overwrite_partitions(df.where("b IN (0, 3)").repartition("b")),
+    ))
+    files = _files_by_partition(part)
+    assert [len(files[p]) for p in sorted(files)] == [1, 1, 1, 1]
 
     assert not _rebalanced(_write_plans(
         monkeypatch, lambda: part.compact(target_files=2)
@@ -668,6 +676,35 @@ def test_only_partition_scoped_commits_cluster(spark, tmp_path, monkeypatch):
     ))
     assert not _rebalanced(_write_plans(monkeypatch, lambda: flat.append(df)))
     assert sorted(r["id"] for r in part.read().collect()) == list(range(64))
+
+
+def test_hash_partitioned_on_reads_the_analyzed_plan(spark):
+    """``_writer(cluster=True)`` skips its rebalance only for a
+    ``repartition`` on exactly the partition columns, with no fixed
+    count, seen through Project, Filter and Windows partitioned on
+    them, where the column is the same attribute (exprId)."""
+    from pyspark.sql.window import Window as W
+
+    from data_ingestion_framework_spark.sources.tablestore import (
+        _hash_partitioned_on,
+    )
+
+    df = spark.range(0, 16, 1, 2).selectExpr("id", "CAST(id % 4 AS INT) AS b", "id % 8 AS c")
+    by_b = df.repartition("b")
+    cases = {
+        "repartition": (by_b, True),
+        "filter and project": (by_b.where("c > 1").withColumn("d", F.col("c") * 2), True),
+        "window on b": (by_b.withColumn("n", F.count("*").over(W.partitionBy("b", "c"))), True),
+        "window off b": (by_b.withColumn("n", F.count("*").over(W.partitionBy("c"))), False),
+        "fixed count": (df.repartition(4, "b"), False),
+        "two columns": (df.repartition("b", "c"), False),
+        "other column": (df.repartition("c"), False),
+        "re-derived b": (by_b.withColumn("b", F.col("b") + 0), False),
+        "aggregate": (by_b.groupBy("b").count(), False),
+        "none": (df, False),
+    }
+    got = {k: _hash_partitioned_on(d, ["b"]) for k, (d, _) in cases.items()}
+    assert got == {k: want for k, (_, want) in cases.items()}
 
 
 def test_replay_merge_by_source_dir_bucketed(spark, tmp_path):

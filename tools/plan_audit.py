@@ -83,7 +83,9 @@ def _count_single_partition_windows(plan: str) -> int:
     TakeOrderedAndProject collapse, i.e. a stage where EVERY row
     funnels through one task. Matching on the bare ``SinglePartition``
     token also catches ``ReusedExchange [...SinglePartition...]``."""
-    lines = plan.splitlines()
+    # split on newlines only: str.splitlines() also breaks on the \x1e
+    # of the NULL sentinel that hash expressions print
+    lines = plan.split("\n")
     n = 0
     for i, ln in enumerate(lines):
         # "Window" also prefixes WindowGroupLimit (the rank-pushdown
