@@ -108,15 +108,18 @@ def apply_rules(
     ``data_quality_result_array`` columns
     (di_landing_to_raw_generic_v2.py:585-611).
 
-    Every flag and both result columns come from one ``withColumns``
-    (one JVM analysis); the result columns restate the flag
-    expressions, which Spark's common-subexpression elimination
-    evaluates once per row. An
-    ``orphan_check`` first joins its FK keyset in as a ``__fk<i>``
-    column, dropped at the end; a ``unique_check`` flag is a window
-    count."""
+    Flags are added by one ``withColumns`` (one JVM analysis) per run
+    of rules up to the next ``orphan_check``, not one ``withColumn``
+    per column; the last one also adds both result columns, which
+    restate the flag expressions it adds (Spark's
+    common-subexpression elimination evaluates them once per row). An
+    ``orphan_check`` joins its FK keyset in as a ``__fk<i>`` column,
+    dropped at the end; a ``unique_check`` flag is a window count.
+    Joins and windows keep their rule order in the plan: a window
+    before a join shuffles while the FK keys are broadcast, not after."""
     related = related or {}
-    flags: dict[str, Column] = {}
+    flags: dict[str, Column] = {}  # each flag's column once added, else its expression
+    pending: dict[str, Column] = {}  # flags not added yet
     fks: list[str] = []
     for rule in rules:
         if not rule.enabled:
@@ -124,6 +127,10 @@ def apply_rules(
         if rule.rule_type in ROW_LOCAL_TYPES:
             flag = violation_expr(rule)
         elif rule.rule_type == "orphan_check":  # :276-280 FK left join
+            if pending:
+                df = df.withColumns(pending)
+                flags.update({name: F.col(name) for name in pending})
+                pending = {}
             fk = f"__fk{len(fks)}"
             keys = related[rule.related_table].select(
                 F.col(rule.related_column).alias(fk)
@@ -136,7 +143,7 @@ def apply_rules(
             flag = F.count(F.lit(1)).over(W.partitionBy(*grp)) > 1
         else:
             raise ValueError(f"unknown rule type: {rule.rule_type}")
-        flags[f"__dq_{rule.rule_id}"] = flag
+        flags[f"__dq_{rule.rule_id}"] = pending[f"__dq_{rule.rule_id}"] = flag
 
     result_arr = F.array_compact(
         F.array(
@@ -148,7 +155,7 @@ def apply_rules(
         )
     ) if flags else F.array().cast("array<string>")
     df = df.withColumns(
-        {**flags, RESULT_ARRAY: result_arr, VALID_FLAG: F.size(result_arr) == 0}
+        {**pending, RESULT_ARRAY: result_arr, VALID_FLAG: F.size(result_arr) == 0}
     )
     return df.drop(*fks) if fks else df
 

@@ -196,8 +196,12 @@ def scd1_bucket_merge(
 
     The result is hash-partitioned on ``bucket_col``, so a partition-
     scoped write of it needs no second exchange to leave one file per
-    bucket (``ParquetTable._writer``). Unbucketed merges keep
-    ``scd1_apply``: there the target passes its anti join unshuffled.
+    bucket (``ParquetTable._writer``), and each bucket is sorted and
+    written by one task. Unbucketed merges keep ``scd1_apply``: there
+    the target passes its anti join unshuffled. So do merges touching
+    a bucket above the advisory partition size
+    (``sinks/writers.py:_buckets_fit_one_task``), whose write's
+    rebalance splits it.
     Column order and union typing are ``scd1_apply``'s: target columns
     first, then source-only ones. The window and the filter are SQL
     text: one parse each where Column operators cost one Py4J round

@@ -10,6 +10,8 @@ operators/scd.py; this module is the thin commit layer.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -70,6 +72,27 @@ def _pruned_target(table: ParquetTable, buckets: list[int]) -> DataFrame:
     bucket. An empty batch touches no bucket."""
     in_list = ", ".join(map(str, buckets))
     return table.read().where(f"{BUCKET_COL} IN ({in_list})" if buckets else "false")
+
+
+def _buckets_fit_one_task(table: ParquetTable, buckets: list[int]) -> bool:
+    """Whether each touched bucket's live files, in listed bytes, fit
+    AQE's advisory partition size: the most a rebalance gives one
+    write task. ``scd1_bucket_merge`` writes each bucket from one task,
+    so a merge touching a larger bucket keeps ``scd1_apply`` and the
+    write's rebalance, which splits that bucket over several tasks.
+    Parquet bytes understate the rows' shuffle size, so the merge can
+    still give one task a bucket whose shuffle bytes are above it."""
+    spark = table.spark
+    limit = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+        spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
+    )
+    dirs = {f"{BUCKET_COL}={b}" for b in buckets}
+    size: dict[str, int] = {}
+    for rel in table._live_files():
+        part = rel.split(os.sep)[0]
+        if part in dirs:
+            size[part] = size.get(part, 0) + os.path.getsize(os.path.join(table.path, rel))
+    return max(size.values(), default=0) <= limit
 
 
 def ordered_base_paths(df: DataFrame, depth: int = -1) -> list[str]:
@@ -237,7 +260,11 @@ def batch_write(
       one shuffle, on the bucket: the partition-scoped write keeps that
       partitioning instead of rebalancing, so the merge takes four
       Spark jobs (touched-bucket collect, two; shuffle map; write) and
-      still leaves one file per touched bucket.
+      still leaves one file per touched bucket. That writes each bucket
+      from one task, so when a touched bucket's live files list more
+      bytes than AQE's advisory partition size, the merge runs
+      ``scd.scd1_apply`` instead and the write's rebalance splits the
+      bucket over several tasks (two shuffles, as before).
     """
     if except_columns:
         df = df.drop(*except_columns)  # SELECT * EXCEPT(...) OSS form
@@ -286,10 +313,11 @@ def batch_write(
                 # partition-scoped merge: read and rewrite ONLY the
                 # buckets this batch touches; all other partitions'
                 # files stay in place. O(touched data), not O(table).
-                # SCD1 merges in the bucket shuffle the write reuses.
+                # SCD1 merges in the bucket shuffle the write reuses,
+                # unless a touched bucket is too big for one task.
                 buckets = _touched_buckets(df)
                 target = _pruned_target(table, buckets)
-                if scd_type == 1:
+                if scd_type == 1 and _buckets_fit_one_task(table, buckets):
                     new_state = scd.scd1_bucket_merge(
                         target, df, key_cols, order_col, BUCKET_COL
                     )

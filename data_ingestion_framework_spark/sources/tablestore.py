@@ -59,6 +59,7 @@ import shutil
 import time
 import uuid
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -145,30 +146,36 @@ def _hash_partitioned_on(df: DataFrame, cols: list[str]) -> bool:
     Spark plans on the same partitioning, with no exchange of their
     own. Read from the analyzed plan, with no planning pass. The
     repartition's columns must be attributes of ``df``'s output (same
-    exprId), so a re-derived column of the same name does not count."""
+    exprId), so a re-derived column of the same name does not count.
+    The walk calls Catalyst's plan accessors through Py4J; a plan it
+    cannot read (say, an accessor a Spark release renamed) counts as
+    not partitioned, and the write keeps its rebalance."""
 
     def attr_ids(seq) -> set:
         items = [seq.apply(i) for i in range(seq.size())]
         return {e.exprId().id() for e in items if e.nodeName() == "AttributeReference"}
 
-    plan = df._jdf.queryExecution().analyzed()
-    node, windows = plan, []
-    while (name := node.nodeName()) in ("Project", "Filter", "Window"):
-        if name == "Window":
-            windows.append(node.partitionSpec())
-        node = node.child()
-    if name != "RepartitionByExpression" or node.optNumPartitions().isDefined():
+    try:
+        plan = df._jdf.queryExecution().analyzed()
+        node, windows = plan, []
+        while (name := node.nodeName()) in ("Project", "Filter", "Window"):
+            if name == "Window":
+                windows.append(node.partitionSpec())
+            node = node.child()
+        if name != "RepartitionByExpression" or node.optNumPartitions().isDefined():
+            return False
+        seq = node.partitionExpressions()
+        exprs = [seq.apply(i) for i in range(seq.size())]
+        if any(e.nodeName() != "AttributeReference" for e in exprs):
+            return False
+        out, want = plan.outputSet(), {e.exprId().id() for e in exprs}
+        return (
+            sorted(e.name() for e in exprs) == sorted(cols)
+            and all(out.contains(e) for e in exprs)
+            and all(want <= attr_ids(spec) for spec in windows)
+        )
+    except Py4JError:
         return False
-    seq = node.partitionExpressions()
-    exprs = [seq.apply(i) for i in range(seq.size())]
-    if any(e.nodeName() != "AttributeReference" for e in exprs):
-        return False
-    out, want = plan.outputSet(), {e.exprId().id() for e in exprs}
-    return (
-        sorted(e.name() for e in exprs) == sorted(cols)
-        and all(out.contains(e) for e in exprs)
-        and all(want <= attr_ids(spec) for spec in windows)
-    )
 
 
 def _is_hidden(rel: str) -> bool:

@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import Row
 
@@ -103,7 +105,8 @@ def _old_apply_rules(df, rules, related=None):
 def test_apply_rules_in_one_projection_equals_chained_columns(spark, order):
     """Flags of every rule type, interleaved (row-local, orphan, unique,
     a disabled rule, two orphan rules), come out in the same column
-    order, types and values as the chained-``withColumn`` version."""
+    order, types and values as the chained-``withColumn`` version, and
+    the joins and windows in the same plan order."""
     df = spark.createDataFrame(
         [
             Row(id=1, fk=10, name="ok", bal=50.0, seg="A"),
@@ -140,6 +143,16 @@ def test_apply_rules_in_one_projection_equals_chained_columns(spark, order):
     assert new.columns[: len(df.columns)] == df.columns
     key = lambda r: (r["id"], str(r["seg"]))  # noqa: E731
     assert sorted(new.collect(), key=key) == sorted(old.collect(), key=key)
+
+    def joins_and_windows(d):
+        plan = d._jdf.queryExecution().optimizedPlan().toString()
+        return [
+            m.group(1)
+            for m in (re.match(r"[\s:+-]*(Join|Window)\b", ln) for ln in plan.split("\n"))
+            if m
+        ]
+
+    assert joins_and_windows(new) == joins_and_windows(old)
 
 
 def test_datatype_and_special_char_checks(spark):

@@ -30,6 +30,7 @@ from data_ingestion_framework_spark.operators import scd
 from data_ingestion_framework_spark.session import local_frame
 from data_ingestion_framework_spark.sinks.writers import (
     BUCKET_COL,
+    _buckets_fit_one_task,
     batch_write,
     stamp_bucket,
 )
@@ -230,11 +231,9 @@ def _bucketed(spark, path: str) -> tuple[ParquetTable, DataFrame]:
     return t, batch
 
 
-def test_bucketed_scd1_write_runs_one_exchange(spark, tmp_path):
-    """The executed plan of the merge's write has one Exchange (the
-    bucket repartition the merge window runs on) and no rebalance; the
-    commit still leaves one file per touched bucket."""
-    t, batch = _bucketed(spark, f"{tmp_path}/t")
+def _write_plan(spark, write) -> str:
+    """The physical plan description of the one data write ``write()``
+    runs, from the SQL status store."""
     sc = spark.sparkContext
     # the status store keeps a bounded number of executions, so the
     # write's is found by a description of its own among the last few
@@ -242,7 +241,7 @@ def test_bucketed_scd1_write_runs_one_exchange(spark, tmp_path):
     prev = sc.getLocalProperty("spark.job.description")
     sc.setJobDescription(tag)
     try:
-        batch_write(batch, t, mode="merge", key_cols=KEYS, order_col="mtime")
+        write()
     finally:
         sc.setLocalProperty("spark.job.description", prev)
     store = spark._jsparkSession.sharedState().statusStore()
@@ -260,7 +259,19 @@ def test_bucketed_scd1_write_runs_one_exchange(spark, tmp_path):
             break
         time.sleep(0.1)
     assert len(writes) == 1
-    plan = writes[0].physicalPlanDescription()
+    return writes[0].physicalPlanDescription()
+
+
+def _merge(t: ParquetTable, batch: DataFrame) -> None:
+    batch_write(batch, t, mode="merge", key_cols=KEYS, order_col="mtime")
+
+
+def test_bucketed_scd1_write_runs_one_exchange(spark, tmp_path):
+    """The executed plan of the merge's write has one Exchange (the
+    bucket repartition the merge window runs on) and no rebalance; the
+    commit still leaves one file per touched bucket."""
+    t, batch = _bucketed(spark, f"{tmp_path}/t")
+    plan = _write_plan(spark, lambda: _merge(t, batch))
     final = plan.split("== Initial Plan ==")[0]
     tree = final.split("\n\n")[0]
     assert len(re.findall(r"Exchange", tree)) == 1, plan
@@ -273,11 +284,32 @@ def test_bucketed_scd1_write_runs_one_exchange(spark, tmp_path):
     assert len(files) == 16
 
 
+def test_bucket_above_the_advisory_size_keeps_the_rebalance(spark, tmp_path):
+    """A touched bucket whose files list more bytes than the advisory
+    partition size is merged by ``scd1_apply`` and rebalanced by the
+    write, which may split it over tasks; the state equals the one-
+    shuffle merge's."""
+    t, batch = _bucketed(spark, f"{tmp_path}/t")
+    ref, _ = _bucketed(spark, f"{tmp_path}/ref")
+    _merge(ref, batch)
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "1k")
+    try:
+        assert not _buckets_fit_one_task(t, list(range(16)))
+        plan = _write_plan(spark, lambda: _merge(t, batch))
+    finally:
+        spark.conf.set(key, prev)
+    assert _buckets_fit_one_task(t, list(range(16)))
+    assert "REBALANCE_PARTITIONS_BY_COL" in plan, plan
+    _assert_same(t.read(), ref.read())
+
+
 def test_bucketed_scd1_merge_launches_at_most_four_jobs(spark, tmp_path, launched_jobs):
     """The touched-bucket collect (two jobs), the merge's shuffle-map
     job and the write: no second shuffle of the merged rows."""
     t, batch = _bucketed(spark, f"{tmp_path}/t")
     with launched_jobs() as ids:
-        batch_write(batch, t, mode="merge", key_cols=KEYS, order_col="mtime")
+        _merge(t, batch)
     assert len(ids) <= 4, ids
     assert t.read().count() == 400 + len(range(402, 600, 3))

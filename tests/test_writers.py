@@ -706,6 +706,14 @@ def test_hash_partitioned_on_reads_the_analyzed_plan(spark):
     got = {k: _hash_partitioned_on(d, ["b"]) for k, (d, _) in cases.items()}
     assert got == {k: want for k, (_, want) in cases.items()}
 
+    # a plan accessor that does not exist (as after a Spark release
+    # renames one) raises a Py4J error: read as not partitioned, so the
+    # write keeps its rebalance instead of failing
+    class Unreadable:
+        _jdf = spark._jsparkSession  # has no queryExecution()
+
+    assert _hash_partitioned_on(Unreadable(), ["b"]) is False
+
 
 def test_replay_merge_by_source_dir_bucketed(spark, tmp_path):
     """Per-source-directory replay in mtime order into a BUCKETED target:
